@@ -173,12 +173,21 @@ object Sync {
     * re-run (bench pass 2) must not reuse a deleted DB directory. */
   private val y48Runs = new java.util.concurrent.atomic.AtomicLong()
 
+  /** `partCol` stages a y49 partitioned version: Hive `<col>=<v>/`
+    * subdirs inside the version dir, the same swap tail. */
   private[graft] def publish(s: SparkSession, df: DataFrame, root: String,
-      version: Int, validate: DataFrame => Boolean): Boolean = {
+      version: Int, validate: DataFrame => Boolean,
+      partCol: Option[String] = None): Boolean = {
     val staging = s"$root/_staging_v$version"
-    df.write.mode("overwrite").parquet(staging)
+    writer(df, partCol).mode("overwrite").parquet(staging)
     publishStagedDir(s, root, version, validate)
   }
+
+  /** `df.write`, Hive-partitioned by `partCol` when there is one. A
+    * flat write skips `partitionBy` entirely: its empty form still adds
+    * a partitioning option to the write plan. */
+  private def writer(df: DataFrame, partCol: Option[String]) =
+    partCol.fold(df.write)(df.write.partitionBy(_))
 
   /** Validate + rename + pointer-swap an ALREADY-POPULATED
     * `_staging_v{n}` dir — the tail of [[publish]], exposed so callers
@@ -317,9 +326,10 @@ object Sync {
   }
 
   /** Y38/r13: per-file manifest for a published version — the ONE
-    * authority on the version's CONTENT. Row layout ([[ManifestCols]]):
+    * authority on the version's CONTENT. Row layout ([[manifestCols]]):
     *
-    *   file    name relative to its dir (part=<v>/<name> on y49)
+    *   file    name relative to its dir (<col>=<v>/<name> on y49)
+    *   part    y49 only: the partition value, as its path renders it
     *   dir     the VERSION DIR the file physically lives in ("v3")
     *   kmin/kmax  key span (the y38 pruning index)
     *   n_rows  row count (manifest-only COUNT(*), LIMIT planning)
@@ -340,8 +350,40 @@ object Sync {
     * prefix = invisible to plain parquet readers); derived here by one
     * grouped scan + ONE listing after the write — a production writer
     * emits the same rows from its own footer stats. */
-  private[graft] val ManifestCols =
-    Seq("file", "dir", "kmin", "kmax", "n_rows", "bytes")
+  private[graft] def manifestCols(partitioned: Boolean): Seq[String] =
+    Seq("file") ++ (if (partitioned) Seq("part") else Nil) ++
+      Seq("dir", "kmin", "kmax", "n_rows", "bytes")
+
+  /** The partition column manifest names encode: y49 names read
+    * `<col>=<v>/<file>`; None on a flat version. */
+  private[graft] def partColIn(names: Iterable[String]): Option[String] =
+    names.collectFirst { case n if n.contains("=") => n.split("=", 2)(0) }
+
+  /** A version's partition column — [[LocalManifest.partCol]], or the
+    * same rule over the listing of a manifest-less version. */
+  private[graft] def partColOf(s: SparkSession, root: String,
+      vName: String): Option[String] = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(s"$root/$vName/_file_stats")))
+      manifestLocal(s, root, vName).partCol
+    else partColIn(dataFiles(fs, s"$root/$vName").map(_._2))
+  }
+
+  /** A dir's local data files with their manifest names: `part-*` at
+    * the top, `<col>=<v>/part-*` one level down on a y49 dir. */
+  private[graft] def dataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Seq[(org.apache.hadoop.fs.FileStatus, String)] = {
+    def parts(p: org.apache.hadoop.fs.Path) = fs.listStatus(p).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (st.isFile && n.startsWith("part-")) Seq((st, n))
+      else if (st.isDirectory && n.contains("="))
+        parts(st.getPath).map(f => (f, s"$n/${f.getPath.getName}"))
+      else Nil
+    }
+  }
 
   /** The version-dir name manifest rows minted inside `dirName` must
     * claim: rows staged in `_staging_v{n}` travel to `v{n}`. */
@@ -359,61 +401,61 @@ object Sync {
     else s"$root/$rowDir"
 
   /** The manifest schema for a given key type (kmin/kmax carry it). */
-  private def manifestSchema(kt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.StructType = {
+  private def manifestSchema(kt: org.apache.spark.sql.types.DataType,
+      partitioned: Boolean): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("file", StringType, nullable = false),
-      StructField("dir", StringType, nullable = false),
-      StructField("kmin", kt, nullable = true),
-      StructField("kmax", kt, nullable = true),
-      StructField("n_rows", LongType, nullable = false),
-      StructField("bytes", LongType, nullable = false)))
-  }
-
-  /** Manifest rows for `dir`'s local data files — parquet FOOTER
-    * statistics first (zero Spark jobs, no data-page IO; see
-    * [[FooterStats]]), falling back to the pre-r13 one-job grouped
-    * scan for key types whose footer stats aren't exactness-safe.
-    * Returns (kmin/kmax Spark type, rows in [[ManifestCols]] order
-    * minted for `vName`). */
-  private def statRows(s: SparkSession,
-      statuses: Seq[org.apache.hadoop.fs.FileStatus], dir: String,
-      key: String, vName: String,
-      rel: org.apache.hadoop.fs.FileStatus => String)
-      : (org.apache.spark.sql.types.DataType,
-         Array[org.apache.spark.sql.Row]) = {
-    val conf = s.sparkContext.hadoopConfiguration
-    if (statuses.isEmpty)
-      return (org.apache.spark.sql.types.NullType, Array.empty)
-    FooterStats.sweep(conf, statuses, key, rel) match {
-      case Some((kt, stats)) =>
-        (kt, stats.map(f => org.apache.spark.sql.Row(
-          f.name, vName, f.kmin, f.kmax, f.nRows, f.bytes)).toArray)
-      case None => statRowsScan(s, statuses, dir, key, vName, rel)
-    }
-  }
-
-  /** The pre-r13 one-job grouped scan — the fallback whose min/max
-    * types match what a Spark read of the files produces by
-    * construction (footer sweep can disagree for logically-annotated
-    * ints, e.g. int8/int16). */
-  private def statRowsScan(s: SparkSession,
-      statuses: Seq[org.apache.hadoop.fs.FileStatus], dir: String,
-      key: String, vName: String,
-      rel: org.apache.hadoop.fs.FileStatus => String)
-      : (org.apache.spark.sql.types.DataType,
-         Array[org.apache.spark.sql.Row]) = {
-    val lens = statuses.map(st => rel(st) -> st.getLen).toMap
-    val agg = s.read.parquet(dir)
-      .groupBy(regexp_extract(input_file_name(), "[^/]+$", 0)
-        .as("file"))
-      .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"),
-        count(lit(1)).as("n_rows"))
-    (agg.schema("kmin").dataType, agg.collect().map { r =>
-      org.apache.spark.sql.Row(r.getString(0), vName, r.get(1),
-        r.get(2), r.getLong(3), lens.getOrElse(r.getString(0), -1L))
+    StructType(manifestCols(partitioned).map {
+      case c @ ("kmin" | "kmax") => StructField(c, kt, nullable = true)
+      case c @ ("n_rows" | "bytes") => StructField(c, LongType, nullable = false)
+      case c => StructField(c, StringType, nullable = false)
     })
+  }
+
+  /** Manifest rows for `dir`'s local data files (named as
+    * [[dataFiles]] names them) — parquet FOOTER statistics first (zero
+    * Spark jobs, no data-page IO; see [[FooterStats]]), falling back
+    * to the pre-r13 one-job grouped scan for key types whose footer
+    * stats aren't exactness-safe or disagree with `expectKt`. A y49
+    * row's `part` is its name's partition value, unescaped as the
+    * `partitionBy` write escaped it. Returns (kmin/kmax Spark type,
+    * rows in [[manifestCols]] order minted for `vName`). */
+  private def statRows(s: SparkSession,
+      files: Seq[(org.apache.hadoop.fs.FileStatus, String)], dir: String,
+      key: String, vName: String,
+      expectKt: Option[org.apache.spark.sql.types.DataType],
+      partitioned: Boolean)
+      : (org.apache.spark.sql.types.DataType,
+         Array[org.apache.spark.sql.Row]) = {
+    def row(name: String, kmin: Any, kmax: Any, n: Long, bytes: Long) =
+      org.apache.spark.sql.Row.fromSeq(Seq(name) ++
+        (if (partitioned) Seq(org.apache.spark.sql.catalyst.catalog
+          .ExternalCatalogUtils.unescapePathName(
+            name.split("/", 2)(0).split("=", 2)(1))) else Nil) ++
+        Seq(vName, kmin, kmax, n, bytes))
+    if (files.isEmpty)
+      return (org.apache.spark.sql.types.NullType, Array.empty)
+    val relOf = files.map { case (st, n) => st.getPath.toString -> n }.toMap
+    FooterStats.sweep(s.sparkContext.hadoopConfiguration, files.map(_._1),
+        key, st => relOf(st.getPath.toString)) match {
+      case Some((kt, stats)) if expectKt.forall(_ == kt) =>
+        (kt, stats.map(f =>
+          row(f.name, f.kmin, f.kmax, f.nRows, f.bytes)).toArray)
+      case _ =>
+        // the grouped scan — its min/max types match what a Spark read
+        // of the files produces by construction (the footer sweep can
+        // disagree for logically-annotated ints, e.g. int8/int16)
+        val lens = files.map { case (st, n) => n -> st.getLen }.toMap
+        val agg = s.read.parquet(dir)
+          .groupBy(regexp_extract(input_file_name(),
+            if (partitioned) "[^/]+=[^/]+/[^/]+$" else "[^/]+$", 0)
+            .as("file"))
+          .agg(min(col(key)).as("kmin"), max(col(key)).as("kmax"),
+            count(lit(1)).as("n_rows"))
+        (agg.schema("kmin").dataType, agg.collect().map { r =>
+          row(r.getString(0), r.get(1), r.get(2), r.getLong(3),
+            lens.getOrElse(r.getString(0), -1L))
+        })
+    }
   }
 
   private[graft] def writeFileStats(s: SparkSession, dir: String,
@@ -421,14 +463,16 @@ object Sync {
     import org.apache.hadoop.fs.Path
     val p = new Path(dir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val statuses = fs.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val vName = mintDirName(p.getName)
-    val (kt, rows) = statRows(s, statuses, dir, key, vName,
-      _.getPath.getName)
+    val files = dataFiles(fs, dir)
+    val partCol = partColIn(files.map(_._2))
+    require(!partCol.exists(manifestCols(true).contains),
+      s"writeFileStats: partition column '${partCol.get}' collides " +
+        "with a manifest column")
+    val (kt, rows) = statRows(s, files, dir, key, mintDirName(p.getName),
+      None, partCol.nonEmpty)
     val kt2 = if (rows.isEmpty) org.apache.spark.sql.types.LongType else kt
     s.createDataFrame(java.util.Arrays.asList(rows: _*),
-        manifestSchema(kt2))
+        manifestSchema(kt2, partCol.nonEmpty))
       .write.mode("overwrite").parquet(s"$dir/_file_stats")
   }
 
@@ -456,6 +500,9 @@ object Sync {
       rawHasDirBytes: Boolean = true) {
     private def idx(c: String) = schema.fieldIndex(c)
     def files: Seq[String] = rows.map(_.getString(idx("file")))
+    /** The version's partition column — the one place graft decides
+      * it (see [[partColIn]]). */
+    def partCol: Option[String] = partColIn(files)
     /** Σ n_rows, None when any row predates row counts (legacy -1). */
     def nRowsTotal: Option[Long] = {
       val i = idx("n_rows")
@@ -549,40 +596,30 @@ object Sync {
     }.reduce(_.unionByName(_))
   }
 
-  /** Manifest rows for the NEW data files a staged FLAT version just
-    * wrote (spans scanned from the staging dir's local files only —
-    * carried files are never there, that is the point; sizes from ONE
-    * listing; `dir` = the version the rename will mint), unioned with
-    * the CARRIED rows verbatim — each still naming the dir where its
-    * file physically lives — and written as the staged `_file_stats`.
-    * Returns the new rows (callers key CDF emptiness etc. off them). */
+  /** Manifest rows for the NEW data files a staged version just wrote
+    * (spans scanned from the staging dir's local files only — carried
+    * files are never there, that is the point; sizes from ONE listing;
+    * `dir` = the version the rename will mint), unioned with the
+    * CARRIED rows verbatim — each still naming the dir where its file
+    * physically lives — and written as the staged `_file_stats`. The
+    * carried frame's columns say whether the version is partitioned.
+    * Returns Σ n_rows over the new rows (the publish gate's input). */
   private def writeStagedManifest(s: SparkSession, root: String,
-      toVersion: Int, key: String, carried: DataFrame)
-      : Array[org.apache.spark.sql.Row] = {
+      toVersion: Int, key: String, carried: DataFrame): Long = {
     import org.apache.hadoop.fs.Path
     val staging = s"$root/_staging_v$toVersion"
     val fs = new Path(staging)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(staging))) fs.mkdirs(new Path(staging))
-    val statuses = fs.listStatus(new Path(staging)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    // footer-stats first (zero jobs; see FooterStats) with the pre-r13
-    // grouped-scan fallback when the key type isn't footer-exact — and
-    // the new rows must carry the CARRIED manifest's kmin/kmax type,
-    // or the union below would write a mixed-type column
-    val carriedN = carried.select(ManifestCols.map(col): _*)
+    val partitioned = carried.columns.contains("part")
+    val carriedN = carried.select(manifestCols(partitioned).map(col): _*)
+    // the new rows must carry the CARRIED manifest's kmin/kmax type, or
+    // the union below would write a mixed-type column: a footer sweep
+    // that disagrees (the carried manifest came from a scan) retries
+    // with the grouped scan before refusing
     val carriedKt = carriedN.schema("kmin").dataType
-    val (kt0, rows0) = statRows(s, statuses, staging, key,
-      s"v$toVersion", _.getPath.getName)
-    // a carried manifest written by a SCAN (pre-r13, or a non-footer-
-    // exact key) can disagree with the footer sweep's type; retry with
-    // the grouped scan — whose types match a Spark read by
-    // construction — before refusing (the partitioned path does the
-    // same via expectKt)
-    val (kt, newRows) =
-      if (rows0.isEmpty || kt0 == carriedKt) (kt0, rows0)
-      else statRowsScan(s, statuses, staging, key, s"v$toVersion",
-        _.getPath.getName)
+    val (kt, newRows) = statRows(s, dataFiles(fs, staging), staging, key,
+      s"v$toVersion", Some(carriedKt), partitioned)
     require(newRows.isEmpty || kt == carriedKt,
       s"writeStagedManifest: staged key type $kt != carried $carriedKt")
     s.createDataFrame(java.util.Arrays.asList(newRows: _*),
@@ -590,8 +627,25 @@ object Sync {
       .unionByName(carriedN)
       .coalesce(1).write.mode("overwrite")
       .parquet(s"$staging/_file_stats")
-    newRows
+    val iRows = manifestCols(partitioned).indexOf("n_rows")
+    newRows.map(_.getLong(iRows)).sum
   }
+
+  /** Read manifest (file, dir) pairs under `schema`: one multi-path read
+    * for a flat version; per source dir (basePath = that dir, so the
+    * partition column infers — one basePath over two version dirs is
+    * CONFLICTING_DIRECTORY_STRUCTURES) and unioned for a y49 one, as
+    * [[readResolved]] does. */
+  private def readFiles(s: SparkSession, root: String,
+      schema: org.apache.spark.sql.types.StructType,
+      partCol: Option[String], fd: Seq[(String, String)]): DataFrame =
+    if (partCol.isEmpty)
+      s.read.schema(schema).parquet(fd.map { case (f, d) =>
+        s"$root/$d/$f" }: _*)
+    else fd.groupBy(_._2).toSeq.sortBy(_._1).map { case (d, g) =>
+      s.read.schema(schema).option("basePath", s"$root/$d")
+        .parquet(g.map(e => s"$root/$d/${e._1}"): _*)
+    }.reduce(_.unionByName(_))
 
   /** Y55: CDF-ON-WRITE — opt-in per lake root (`enableCdf`). Every
     * mutation path stages a `_changes` sidecar INSIDE the version dir
@@ -715,113 +769,115 @@ object Sync {
     // you already have; unpersisted before return)
     val updP = updates.persist()
     val delKeys = deletes.select(col(key)).persist()
-    val changeKeys = delKeys
-      .unionByName(updP.select(col(key))).distinct()
-    // (file, physical dir) pairs — a carried file may live several
-    // versions back; the manifest knows, the dir listing never would
-    val affectedFD = changeKeys.join(broadcast(stats),
-        col(key) >= col("kmin") && col(key) <= col("kmax"))
-      .select("file", "dir").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .sortBy(_._1).toSeq // bounded by file count
-    val affected = affectedFD.map(_._1)
-    val affectedSet = affected.toSet
-    val untouched = statsL.files.sorted.diff(affected)
-    val staging = new Path(s"$root/_staging_v$toVersion")
-    fs.delete(staging, true)
-    // CDF U post-images come from the REWRITE OUTPUT (cached), not a
-    // re-read of the staged files — one less churn-sized scan per
-    // CDF-enabled publish (r13 residual #2)
-    val wantCdf = cdfEnabled(fs, root)
     var appliedCached: DataFrame = null
-    if (affected.isEmpty) fs.mkdirs(staging)
-    else {
-      // the version's LOGICAL schema: post-evolution files and
-      // pre-evolution carries merge cleanly, added columns read null
-      val base = s.read.schema(versionSchema(s, fromDir))
-        .parquet(affectedFD.map { case (f, d) => s"$root/$d/$f" }: _*)
-      val updCols = updates.columns.filterNot(_ == key).toSeq
-      val upd = updP.select(col(key) +:
-        updCols.map(c => col(c).as(s"__upd_$c")): _*)
-      val applied0 = base.join(maybeBroadcast(upd), Seq(key), "left")
-      val applied = updCols.foldLeft(applied0) { (df, c) =>
-          df.withColumn(c, coalesce(col(s"__upd_$c"), col(c)))
-        }.drop(updCols.map("__upd_" + _): _*)
-        .join(maybeBroadcast(delKeys.distinct()), Seq(key), "left_anti")
-        .select(base.columns.map(col).toIndexedSeq: _*)
-      val toWrite =
-        if (wantCdf && logicalCdf) { appliedCached = applied.persist(); appliedCached }
-        else applied
-      toWrite.sortWithinPartitions(key)
-        .write.mode("overwrite").parquet(staging.toString)
-    }
-    // ZERO-COPY CARRY: untouched files are never copied — their
-    // manifest rows (still naming the dirs they live in) ride into the
-    // staged manifest; only the rewritten files are new bytes. The
-    // carried set filters by the CHURN-sized affected list (an isin
-    // over "untouched" would be a million-literal expression at scale)
-    val carriedL = statsL.filterFiles(!affectedSet(_))
-    val newStatsRows = writeStagedManifest(s, root, toVersion, key,
-      carriedL.df(s))
-    // Y55 feed (staged while the dir holds ONLY rewritten files):
-    // U = post-images of updated keys MINUS the deletion vector — an
-    // update of a DV'd ghost is the SQL no-op, the logical row did NOT
-    // change and a mirror fed that U would drift; D = the delete keys
-    // (a D of an already-DV'd key replays as a no-op downstream).
-    // dvFold passes logicalCdf=false: its rewrite changes no logical
-    // row, so it states "no change" with an EMPTY feed.
-    if (wantCdf) {
-      val logical = versionSchema(s, fromDir)
-      if (!logicalCdf)
-        stageEmptyChanges(s, staging.toString, logical, toVersion)
+    try {
+      val changeKeys = delKeys
+        .unionByName(updP.select(col(key))).distinct()
+      // (file, physical dir) pairs — a carried file may live several
+      // versions back; the manifest knows, the dir listing never would
+      val affectedFD = changeKeys.join(broadcast(stats),
+          col(key) >= col("kmin") && col(key) <= col("kmax"))
+        .select("file", "dir").distinct()
+        .collect().map(r => (r.getString(0), r.getString(1)))
+        .sortBy(_._1).toSeq // bounded by file count
+      val affected = affectedFD.map(_._1)
+      val affectedSet = affected.toSet
+      val untouched = statsL.files.sorted.diff(affected)
+      val staging = new Path(s"$root/_staging_v$toVersion")
+      fs.delete(staging, true)
+      // CDF U post-images come from the REWRITE OUTPUT (cached), not a
+      // re-read of the staged files — one less churn-sized scan per
+      // CDF-enabled publish (r13 residual #2)
+      val wantCdf = cdfEnabled(fs, root)
+      if (affected.isEmpty) fs.mkdirs(staging)
       else {
-        val dvKeys =
-          if (fs.exists(new Path(s"$fromDir/_deletes")))
-            s.read.parquet(s"$fromDir/_deletes").select(col(key))
-          else deletes.select(col(key)).limit(0)
-        val uRows =
-          if (appliedCached == null)
-            s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-          else appliedCached
-            .select(logical.fieldNames.map(col).toIndexedSeq: _*)
-            .join(maybeBroadcast(updP.select(col(key)).distinct()),
-              Seq(key), "left_semi")
-            .join(maybeBroadcast(dvKeys), Seq(key), "left_anti")
-        stageChanges(s, staging.toString, logical,
-          uRows.withColumn("op", lit("U")).unionByName(
-            delKeys.withColumn("op", lit("D")),
-            allowMissingColumns = true),
-          toVersion)
+        // the version's LOGICAL schema: post-evolution files and
+        // pre-evolution carries merge cleanly, added columns read null
+        val base = s.read.schema(versionSchema(s, fromDir))
+          .parquet(affectedFD.map { case (f, d) => s"$root/$d/$f" }: _*)
+        val updCols = updates.columns.filterNot(_ == key).toSeq
+        val upd = updP.select(col(key) +:
+          updCols.map(c => col(c).as(s"__upd_$c")): _*)
+        val applied0 = base.join(maybeBroadcast(upd), Seq(key), "left")
+        val applied = updCols.foldLeft(applied0) { (df, c) =>
+            df.withColumn(c, coalesce(col(s"__upd_$c"), col(c)))
+          }.drop(updCols.map("__upd_" + _): _*)
+          .join(maybeBroadcast(delKeys.distinct()), Seq(key), "left_anti")
+          .select(base.columns.map(col).toIndexedSeq: _*)
+        val toWrite =
+          if (wantCdf && logicalCdf) { appliedCached = applied.persist(); appliedCached }
+          else applied
+        toWrite.sortWithinPartitions(key)
+          .write.mode("overwrite").parquet(staging.toString)
       }
+      // ZERO-COPY CARRY: untouched files are never copied — their
+      // manifest rows (still naming the dirs they live in) ride into the
+      // staged manifest; only the rewritten files are new bytes. The
+      // carried set filters by the CHURN-sized affected list (an isin
+      // over "untouched" would be a million-literal expression at scale)
+      val carriedL = statsL.filterFiles(!affectedSet(_))
+      val newRows = writeStagedManifest(s, root, toVersion, key,
+        carriedL.df(s))
+      // Y55 feed (staged while the dir holds ONLY rewritten files):
+      // U = post-images of updated keys MINUS the deletion vector — an
+      // update of a DV'd ghost is the SQL no-op, the logical row did NOT
+      // change and a mirror fed that U would drift; D = the delete keys
+      // (a D of an already-DV'd key replays as a no-op downstream).
+      // dvFold passes logicalCdf=false: its rewrite changes no logical
+      // row, so it states "no change" with an EMPTY feed.
+      if (wantCdf) {
+        val logical = versionSchema(s, fromDir)
+        if (!logicalCdf)
+          stageEmptyChanges(s, staging.toString, logical, toVersion)
+        else {
+          val dvKeys =
+            if (fs.exists(new Path(s"$fromDir/_deletes")))
+              s.read.parquet(s"$fromDir/_deletes").select(col(key))
+            else deletes.select(col(key)).limit(0)
+          val uRows =
+            if (appliedCached == null)
+              s.createDataFrame(
+                s.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
+            else appliedCached
+              .select(logical.fieldNames.map(col).toIndexedSeq: _*)
+              .join(maybeBroadcast(updP.select(col(key)).distinct()),
+                Seq(key), "left_semi")
+              .join(maybeBroadcast(dvKeys), Seq(key), "left_anti")
+          stageChanges(s, staging.toString, logical,
+            uRows.withColumn("op", lit("U")).unionByName(
+              delKeys.withColumn("op", lit("D")),
+              allowMissingColumns = true),
+            toVersion)
+        }
+      }
+      // a MOR deletion vector on the source version still applies to the
+      // new one: deletes here remove their rows physically (every present
+      // change key lives in a rewritten file), and an UPDATE of a
+      // DV-deleted key is the SQL no-op — the ghost row gets modified but
+      // stays subtracted at read. dvFold is the one caller that DROPS the
+      // vector (carryDeletes=false), because its rewrite just applied it.
+      if (carryDeletes &&
+          fs.exists(new Path(s"$fromDir/_deletes")))
+        carrySidecar(s, fromDir, staging.toString, "_deletes")
+      carrySidecar(s, fromDir, staging.toString, "_schema")
+      // non-emptiness is already known from the manifest rows the commit
+      // just assembled — Σ n_rows over new + carried answers the gate
+      // with ZERO reads (the old head(1) resolved and opened data files)
+      val ok = publishStagedDir(s, root, toVersion,
+        manifestValidate(newRows, carriedL))
+      CowReport(ok, affected.length + untouched.length, affected.length,
+        affected, untouched)
+    } finally { // a refused staging must not leave the frames cached
+      if (appliedCached != null) appliedCached.unpersist(blocking = false)
+      updP.unpersist(blocking = false)
+      delKeys.unpersist(blocking = false)
     }
-    // a MOR deletion vector on the source version still applies to the
-    // new one: deletes here remove their rows physically (every present
-    // change key lives in a rewritten file), and an UPDATE of a
-    // DV-deleted key is the SQL no-op — the ghost row gets modified but
-    // stays subtracted at read. dvFold is the one caller that DROPS the
-    // vector (carryDeletes=false), because its rewrite just applied it.
-    if (carryDeletes &&
-        fs.exists(new Path(s"$fromDir/_deletes")))
-      carrySidecar(s, fromDir, staging.toString, "_deletes")
-    carrySidecar(s, fromDir, staging.toString, "_schema")
-    // non-emptiness is already known from the manifest rows the commit
-    // just assembled — Σ n_rows over new + carried answers the gate
-    // with ZERO reads (the old head(1) resolved and opened data files)
-    val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newStatsRows.map(_.getLong(4)).sum, carriedL))
-    if (appliedCached != null) appliedCached.unpersist(blocking = false)
-    updP.unpersist(blocking = false)
-    delKeys.unpersist(blocking = false)
-    CowReport(ok, affected.length + untouched.length, affected.length,
-      affected, untouched)
   }
 
   /** The cow-family publish gate: staged version non-empty, answered
     * from the just-written manifest rows when row counts are complete
     * (zero IO), else the reader-shaped head(1) probe. `stagedRows` =
-    * Σ n_rows over the NEW manifest rows (caller-computed — flat and
-    * partitioned manifests index n_rows differently). */
+    * Σ n_rows over the NEW manifest rows ([[writeStagedManifest]]). */
   private[graft] def manifestValidate(stagedRows: Long,
       carried: LocalManifest): DataFrame => Boolean =
     carried.nRowsTotal match {
@@ -859,8 +915,23 @@ object Sync {
     val fromDir = s"$root/v$fromVersion"
     // ONE manifest read; further uses are driver-local (see cowApply)
     val statsL = manifestLocal(s, root, s"v$fromVersion")
+    require(statsL.rows.nonEmpty,
+      s"cowApplyChanges: $fromDir has no manifest files")
     val stats = statsL.df(s)
-    val wv = Window.partitionBy(key).orderBy(col("version").desc)
+    // Y49: on a partitioned version row identity is (partition, key) —
+    // a row moving between partitions is a D in the old one + an I in
+    // the new one (the Hive/Delta dynamic-partition contract). Pruning
+    // and span routing test PARTITION EQUALITY first: every partition
+    // typically spans the same key range (each day holds the whole
+    // key domain), so span-only pruning would rewrite one file per
+    // partition for every changed key.
+    val partCol = statsL.partCol
+    val ids = partCol.toSeq :+ key
+    val owns = (partCol.map(p => col(p).cast("string") === col("part"))
+      .toSeq :+ (col(key) >= col("kmin") && col(key) <= col("kmax")))
+      .reduce(_ && _)
+    val wv = Window.partitionBy(ids.map(col): _*)
+      .orderBy(col("version").desc)
     // the resolved (latest-wins) batch is consumed 4-5x in one mutation
     // (prune keys, span routing x2 subtrees, the CDF stage, the DV
     // drop) — pre-r14 each consumption re-derived it from the caller's
@@ -868,76 +939,73 @@ object Sync {
     // result for the mutation's duration instead (unpersisted below)
     val latest = changes.withColumn("__rn", row_number().over(wv))
       .filter(col("__rn") === 1).drop("__rn").persist()
-    val upserts = latest.filter(col("op") =!= "D").drop("op", "version")
-    val changeKeys = latest.select(col(key)).distinct()
-    val affectedFD = changeKeys.join(broadcast(stats),
-        col(key) >= col("kmin") && col(key) <= col("kmax"))
-      .select("file", "dir").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .sortBy(_._1).toSeq
-    val affected = affectedFD.map(_._1)
-    val affectedSet = affected.toSet
-    val untouched = statsL.files.sorted.diff(affected)
-    // span routing: in-span upserts join the rewrite of the file whose
-    // range owns their key; the rest are the append frontier
-    val spanned = upserts.join(broadcast(stats),
-      col(key) >= col("kmin") && col(key) <= col("kmax"), "left")
-    val inSpan = spanned.filter(col("file").isNotNull)
-      .drop("file", "dir", "kmin", "kmax", "n_rows", "bytes").distinct()
-    val frontier = spanned.filter(col("file").isNull)
-      .drop("file", "dir", "kmin", "kmax", "n_rows", "bytes")
-    val staging = new Path(s"$root/_staging_v$toVersion")
-    fs.delete(staging, true)
-    require(affected.nonEmpty || untouched.nonEmpty,
-      s"cowApplyChanges: $fromDir has no manifest files")
-    val evolved = versionSchema(s, fromDir)
-    val cols = evolved.fieldNames.toSeq
-    val rewritten =
-      (if (affected.nonEmpty)
-         s.read.schema(evolved)
-           .parquet(affectedFD.map { case (f, d) =>
-             s"$root/$d/$f" }: _*)
-           .join(maybeBroadcast(changeKeys), Seq(key), "left_anti")
-           .select(cols.map(col).toIndexedSeq: _*)
-           .unionByName(inSpan.select(cols.map(col).toIndexedSeq: _*))
-       else inSpan.select(cols.map(col).toIndexedSeq: _*))
-        .unionByName(frontier.select(cols.map(col).toIndexedSeq: _*))
-    // one range shuffle of the CHANGED SUBSET only (never the table):
-    // affected-file rows, in-span upserts, and the append frontier land
-    // back in contiguous key ranges, so every file in the new version
-    // keeps a narrow span and the next mutation prunes just as well
-    rewritten
-      .repartitionByRange(math.max(affected.length, 1) + 1, col(key))
-      .sortWithinPartitions(key)
-      .write.mode("overwrite").parquet(staging.toString)
-    // zero-copy carry: untouched files ride as manifest references
-    // (filtered by the churn-sized affected set, driver-local)
-    val carriedL = statsL.filterFiles(!affectedSet(_))
-    val newStatsRows = writeStagedManifest(s, root, toVersion, key,
-      carriedL.df(s))
-    // MOR interplay: an UPSERT re-asserts its key's existence (CDC
-    // semantics — I/U means the row exists at the source NOW), so the
-    // carried deletion vector drops every upserted key; D keys need no
-    // DV entry — their physical rows were just removed (every present
-    // change key lives in a rewritten file)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$fromDir/_deletes"))) {
-      val oldDv = s.read.parquet(s"$fromDir/_deletes")
-      oldDv.join(maybeBroadcast(upserts.select(col(key)).distinct()),
-          Seq(key), "left_anti")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$staging/_deletes")
-    }
-    // Y55: the resolved (latest-wins) batch IS this commit's change
-    // feed — stage it with the version it creates
-    if (cdfEnabled(fs, root))
-      stageChanges(s, staging.toString, evolved,
-        latest.drop("version"), toVersion)
-    carrySidecar(s, fromDir, staging.toString, "_schema")
-    val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newStatsRows.map(_.getLong(4)).sum, carriedL))
-    latest.unpersist(blocking = false)
-    CowReport(ok, affected.length + untouched.length, affected.length,
-      affected, untouched)
+    try {
+      val upserts = latest.filter(col("op") =!= "D").drop("op", "version")
+      val changeKeys = latest.select(ids.map(col): _*).distinct()
+      val affectedFD = changeKeys.join(broadcast(stats), owns)
+        .select("file", "dir").distinct()
+        .collect().map(r => (r.getString(0), r.getString(1)))
+        .sortBy(_._1).toSeq
+      val affected = affectedFD.map(_._1)
+      val affectedSet = affected.toSet
+      val untouched = statsL.files.sorted.diff(affected)
+      // span routing: in-span upserts join the rewrite of the file whose
+      // (partition and) range owns their key; the rest — new spans and
+      // new partition values alike — are the append frontier
+      val spanned = upserts.join(broadcast(stats), owns, "left")
+      val inSpan = spanned.filter(col("file").isNotNull)
+        .drop(statsL.schema.fieldNames.toIndexedSeq: _*).distinct()
+      val frontier = spanned.filter(col("file").isNull)
+        .drop(statsL.schema.fieldNames.toIndexedSeq: _*)
+      val staging = new Path(s"$root/_staging_v$toVersion")
+      fs.delete(staging, true)
+      val evolved = versionSchema(s, fromDir)
+      val cols = evolved.fieldNames.toSeq
+      val rewritten =
+        (if (affected.nonEmpty)
+           readFiles(s, root, evolved, partCol, affectedFD)
+             .join(maybeBroadcast(changeKeys), ids, "left_anti")
+             .select(cols.map(col).toIndexedSeq: _*)
+             .unionByName(inSpan.select(cols.map(col).toIndexedSeq: _*))
+         else inSpan.select(cols.map(col).toIndexedSeq: _*))
+          .unionByName(frontier.select(cols.map(col).toIndexedSeq: _*))
+      // one range shuffle of the CHANGED SUBSET only (never the table):
+      // affected-file rows, in-span upserts, and the append frontier land
+      // back in contiguous key ranges, so every file in the new version
+      // keeps a narrow span and the next mutation prunes just as well
+      writer(rewritten
+          .repartitionByRange(math.max(affected.length, 1) + 1,
+            ids.map(col): _*)
+          .sortWithinPartitions(ids.map(col): _*), partCol)
+        .mode("overwrite").parquet(staging.toString)
+      // zero-copy carry: untouched files ride as manifest references
+      // (filtered by the churn-sized affected set, driver-local)
+      val carriedL = statsL.filterFiles(!affectedSet(_))
+      val newRows = writeStagedManifest(s, root, toVersion, key,
+        carriedL.df(s))
+      // MOR interplay: an UPSERT re-asserts its key's existence (CDC
+      // semantics — I/U means the row exists at the source NOW), so the
+      // carried deletion vector drops every upserted key; D keys need no
+      // DV entry — their physical rows were just removed (every present
+      // change key lives in a rewritten file)
+      if (fs.exists(new Path(s"$fromDir/_deletes"))) {
+        val oldDv = s.read.parquet(s"$fromDir/_deletes")
+        oldDv.join(maybeBroadcast(upserts.select(col(key)).distinct()),
+            Seq(key), "left_anti")
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$staging/_deletes")
+      }
+      // Y55: the resolved (latest-wins) batch IS this commit's change
+      // feed — stage it with the version it creates
+      if (cdfEnabled(fs, root))
+        stageChanges(s, staging.toString, evolved,
+          latest.drop("version"), toVersion)
+      carrySidecar(s, fromDir, staging.toString, "_schema")
+      val ok = publishStagedDir(s, root, toVersion,
+        manifestValidate(newRows, carriedL))
+      CowReport(ok, affected.length + untouched.length, affected.length,
+        affected, untouched)
+    } finally latest.unpersist(blocking = false)
   }
 
   /** Y39: INCREMENTAL LAKE COMPACTION (the OPTIMIZE verb) — cow
@@ -964,7 +1032,13 @@ object Sync {
     * file) instead of silently degrading the layout to the last sort
     * key — the failure mode Delta's OPTIMIZE-without-ZORDER is known
     * for. PlanAuditSuite pins both dimensions' numOutputRows on the
-    * compacted version. */
+    * compacted version.
+    *
+    * Y49: on a partitioned version bins also break at partition
+    * boundaries (files never merge across partition values — that
+    * would break the layout contract), and the rewrite lands through a
+    * `partitionBy` write. `CALL <cat>.system.compact` routes here for
+    * both layouts. */
   private[graft] def compactPublished(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String,
       targetBytes: Long): CowReport = {
@@ -978,6 +1052,7 @@ object Sync {
     // one listing per distinct source dir. The driver holds names and
     // the running group — the same budget as Spark's own FileIndex.
     val statsL = manifestLocal(s, root, s"v$fromVersion")
+    val partCol = statsL.partCol
     val iFile = statsL.schema.fieldIndex("file")
     val iDir = statsL.schema.fieldIndex("dir")
     val iKmin = statsL.schema.fieldIndex("kmin")
@@ -987,19 +1062,22 @@ object Sync {
         (r.getString(iDir), r.getLong(iBytes))).toMap
     val lens: Map[String, Long] =
       if (fd.values.forall(_._2 >= 0L)) fd.map { case (f, (_, b)) => f -> b }
-      else fd.values.map(_._1).toSet.toSeq.flatMap { (d: String) =>
-        fs.listStatus(new Path(s"$root/$d")).toSeq
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-          .map(st => st.getPath.getName -> st.getLen)
-      }.toMap
+      else fd.values.map(_._1).toSet.toSeq.flatMap((d: String) =>
+        dataFiles(fs, s"$root/$d").map { case (st, n) => n -> st.getLen })
+        .toMap
+    def partOf(f: String) = if (partCol.isEmpty) "" else f.split("/", 2)(0)
     val groups = scala.collection.mutable.ArrayBuffer[Seq[String]]()
     var cur = scala.collection.mutable.ArrayBuffer[String]()
     var curBytes = 0L
+    var curPart = ""
     var nFiles = 0
-    locally { // key order — groups stay span-adjacent
+    locally { // (partition, key) order — groups stay span-adjacent
       val ordered = statsL.rows.sortWith { (a, b) =>
+        val (pa, pb) =
+          (partOf(a.getString(iFile)), partOf(b.getString(iFile)))
         val ka = a.get(iKmin); val kb = b.get(iKmin)
-        if (ka == null) kb != null // null kmin (all-null file) first
+        if (pa != pb) pa < pb
+        else if (ka == null) kb != null // null kmin (all-null file) first
         else if (kb == null) false
         else ka.asInstanceOf[Comparable[Any]].compareTo(kb) < 0
       }
@@ -1007,12 +1085,14 @@ object Sync {
         val f = r.getString(iFile)
         val len = lens(f)
         nFiles += 1
-        if (len < targetBytes / 2 && curBytes + len <= targetBytes) {
+        if (len < targetBytes / 2 && partOf(f) == curPart &&
+            curBytes + len <= targetBytes) {
           cur += f; curBytes += len
         } else {
           if (cur.nonEmpty) { groups += cur.toSeq; cur.clear(); curBytes = 0L }
           if (len < targetBytes / 2) { cur += f; curBytes = len }
         }
+        curPart = partOf(f)
       }
     }
     if (cur.nonEmpty) groups += cur.toSeq
@@ -1026,14 +1106,14 @@ object Sync {
     rewriteGroups.foreach { g =>
       // logical schema: a bin-packed group can mix pre- and
       // post-evolution files — the overlay merges them cleanly
-      s.read.schema(versionSchema(s, fromDir))
-        .parquet(g.map(f => s"$root/${fd(f)._1}/$f"): _*)
-        .repartitionByRange(1, col(key)).sortWithinPartitions(key)
-        .write.mode("append").parquet(staging.toString)
+      writer(readFiles(s, root, versionSchema(s, fromDir), partCol,
+          g.map(f => (f, fd(f)._1)))
+        .repartitionByRange(1, col(key)).sortWithinPartitions(key), partCol)
+        .mode("append").parquet(staging.toString)
     }
     // zero-copy carry: adequately-sized files ride as manifest refs
     val carriedL = statsL.filterFiles(!rewrittenSet(_))
-    val newStatsRows = writeStagedManifest(s, root, toVersion, key,
+    val newRows = writeStagedManifest(s, root, toVersion, key,
       carriedL.df(s))
     // compaction is a PURE layout change: a MOR deletion vector on the
     // source version still subtracts the same keys from the new one —
@@ -1045,7 +1125,7 @@ object Sync {
         versionSchema(s, fromDir), toVersion)
     carrySidecar(s, fromDir, staging.toString, "_schema")
     val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newStatsRows.map(_.getLong(4)).sum, carriedL))
+      manifestValidate(newRows, carriedL))
     CowReport(ok, nFiles, rewritten.length, rewritten, untouched)
   }
 
@@ -1084,7 +1164,7 @@ object Sync {
     // pre-r13 stand-in still copied the table through the driver
     val statsL = manifestLocal(s, root, s"v$fromVersion")
     val files = statsL.files.sorted
-    val newStatsRows = writeStagedManifest(s, root, toVersion, key,
+    val newRows = writeStagedManifest(s, root, toVersion, key,
       statsL.df(s))
     carrySidecar(s, fromDir, staging.toString, "_schema")
     val prior =
@@ -1104,7 +1184,7 @@ object Sync {
           .withColumn("op", lit("D")),
         toVersion)
     val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newStatsRows.map(_.getLong(4)).sum, statsL))
+      manifestValidate(newRows, statsL))
     CowReport(ok, files.length, 0, Nil, files)
   }
 
@@ -1322,7 +1402,7 @@ object Sync {
     // zero-copy carry: untouched files ride as manifest references
     // (filtered by the churn-sized affected set, driver-local)
     val carriedL = statsL.filterFiles(!affectedSet(_))
-    val newStatsRows = writeStagedManifest(s, root, toVersion, key,
+    val newRows = writeStagedManifest(s, root, toVersion, key,
       carriedL.df(s))
     // the carried DV drops ONLY keys this merge physically re-asserted
     // (the inserted rows — a DV'd key can only be NOT MATCHED, so the
@@ -1358,7 +1438,7 @@ object Sync {
     }
     carrySidecar(s, fromDir, staging.toString, "_schema")
     val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newStatsRows.map(_.getLong(4)).sum, carriedL))
+      manifestValidate(newRows, carriedL))
     MergeReport(ok, cardinalityOk = true,
       nTotal, affected.length,
       cnt.getLong(0), cnt.getLong(1), nIns, cnt.getLong(3))
@@ -1379,9 +1459,12 @@ object Sync {
     * churned subset alone — diff cost is proportional to the churn,
     * not the table. At 100 TB with 0.1 % churn that is a ~100 GB join
     * versus two full scans. Returns (changes, scannedFrom/To,
-    * totalFrom/To) so callers can audit the pruning. */
+    * totalFrom/To) so callers can audit the pruning, and the row
+    * identity the diff keyed on: (partition, key) on a y49 version,
+    * whose diff unit is then partition-local, the key alone otherwise. */
   private[graft] final case class CdfReport(changes: DataFrame,
-      scannedFrom: Int, scannedTo: Int, totalFrom: Int, totalTo: Int)
+      scannedFrom: Int, scannedTo: Int, totalFrom: Int, totalTo: Int,
+      ids: Seq[String])
 
   /** BOTH-IMAGES form of the change-data-feed: one row per changed key
     * with `op`, the key, and `pre_<c>` / `post_<c>` for every data
@@ -1404,12 +1487,11 @@ object Sync {
       if (fs.exists(new Path(s"$root/v$v/_file_stats")))
         manifestDf(s, root, s"v$v").select("file", "dir").collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
-      else
-        fs.listStatus(new Path(s"$root/v$v")).toSeq
-          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-          .map(st => st.getPath.getName -> s"v$v").toMap
+      else dataFiles(fs, s"$root/v$v").map(_._2 -> s"v$v").toMap
     val fromFiles = fileSet(fromVersion)
     val toFiles = fileSet(toVersion)
+    val partCol = partColIn(fromFiles.keys ++ toFiles.keys)
+    val ids = partCol.toSeq :+ key
     val carried = fromFiles.keySet.intersect(toFiles.keySet)
       .filter(f => fromFiles(f) == toFiles(f))
     val fromOnly = (fromFiles.keySet -- carried).toSeq.sorted
@@ -1422,10 +1504,9 @@ object Sync {
       if (files.isEmpty)
         s.createDataFrame(s.sparkContext
           .emptyRDD[org.apache.spark.sql.Row], schema)
-      else s.read.schema(schema)
-        .parquet(files.map(f => s"$root/${dirs(f)}/$f"): _*)
+      else readFiles(s, root, schema, partCol, files.map(f => (f, dirs(f))))
     }
-    val dataCols = schema.fieldNames.toSeq.filterNot(_ == key)
+    val dataCols = schema.fieldNames.toSeq.filterNot(ids.contains)
     // MOR awareness: a version's logical content is its files MINUS its
     // deletion vector, so each side anti-joins its own DV before the
     // compare. A DV'd ghost row thus never reads as present (a key
@@ -1441,16 +1522,14 @@ object Sync {
     val toDv = dvOf(toVersion)
     val l = subset(fromVersion, fromOnly)
       .join(broadcast(fromDv), Seq(key), "left_anti")
-      .select(col(key) +:
-        lit(true).as("__l_present") +:
-        dataCols.map(c => col(c).as(s"pre_$c")): _*)
+      .select(ids.map(col) ++ (lit(true).as("__l_present") +:
+        dataCols.map(c => col(c).as(s"pre_$c"))): _*)
     val r = subset(toVersion, toOnly)
       .join(broadcast(toDv), Seq(key), "left_anti")
-      .select(col(key) +:
-        lit(true).as("__r_present") +:
-        dataCols.map(c => col(c).as(s"post_$c")): _*)
+      .select(ids.map(col) ++ (lit(true).as("__r_present") +:
+        dataCols.map(c => col(c).as(s"post_$c"))): _*)
     // churn-sized full-outer join, the y3 idiom on the pruned subset
-    val j = l.join(r, Seq(key), "full_outer")
+    val j = l.join(r, ids, "full_outer")
     val differs = dataCols.map(c =>
       !(col(s"pre_$c") <=> col(s"post_$c"))).reduce(_ || _)
     val images = j.withColumn("op",
@@ -1461,7 +1540,7 @@ object Sync {
       // a physically-rewritten-but-identical row passed the filter as
       // neither I/U/D — for the survivors, null the absent image so a
       // D row shows no post and an I row no pre
-      .select(col("op") +: col(key) +:
+      .select(col("op") +: ids.map(col) ++:
         (dataCols.map(c => when(col("__l_present").isNotNull,
            col(s"pre_$c")).as(s"pre_$c")) ++
          dataCols.map(c => when(col("__r_present").isNotNull,
@@ -1488,14 +1567,14 @@ object Sync {
           .collect().map(_.getString(0)).toSeq
         subset(fromVersion, hitFiles)
           .join(broadcast(deltaDv), Seq(key), "left_semi")
-          .select(lit("D").as("op") +: col(key) +:
+          .select(lit("D").as("op") +: ids.map(col) ++:
             (dataCols.map(c => col(c).as(s"pre_$c")) ++
              dataCols.map(c =>
                lit(null).cast(schema(c).dataType).as(s"post_$c"))): _*)
       }
     CdfReport(images.unionByName(morDeletes),
       fromOnly.length, toOnly.length,
-      fromFiles.size, toFiles.size)
+      fromFiles.size, toFiles.size, ids)
   }
 
   private[graft] def lakeChanges(s: SparkSession, root: String,
@@ -1504,7 +1583,7 @@ object Sync {
     val dataCols = rep.changes.columns.toSeq
       .collect { case c if c.startsWith("pre_") => c.stripPrefix("pre_") }
     rep.copy(changes = rep.changes.select(
-      col("op") +: col(key) +: dataCols.map(c =>
+      col("op") +: rep.ids.map(col) ++: dataCols.map(c =>
         // presence-keyed by op: post-image for I/U, pre-image for D —
         // an updated-to-NULL column must surface as NULL
         when(col("op") === "D", col(s"pre_$c"))
@@ -1938,15 +2017,15 @@ object Sync {
     val staging = new Path(s"$root/_staging_v$toVersion")
     fs.delete(staging, true)
     fs.mkdirs(staging)
-    if (fs.exists(new Path(s"$fromDir/_file_stats")))
+    if (fs.exists(new Path(s"$fromDir/_file_stats"))) {
       // zero-copy: every data file carries as a manifest reference —
       // the normalized rewrite (not a sidecar copy) so legacy
       // dir-less rows pin the dir they actually live in
-      manifestDf(s, root, s"v$fromVersion")
-        .select(ManifestCols.map(col): _*)
+      val m = manifestDf(s, root, s"v$fromVersion")
+      m.select(manifestCols(m.columns.contains("part")).map(col): _*)
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$staging/_file_stats")
-    else // manifest-less version: the legacy physical carry
+    } else // manifest-less version: the legacy physical carry
       fs.listStatus(new Path(fromDir)).toSeq
         .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
         .foreach { st =>
@@ -4889,7 +4968,9 @@ object Sync {
           lit(t2.nInsert > 0 && t2.nUpdate > 0 && t2.nDelete > 0))
     }),
 
-    // Y49: PARTITIONED PUBLISHED TABLE — see [[PartLake]]. v1 is
+    // Y49: PARTITIONED PUBLISHED TABLE — [[publish]] with a partition
+    // column, then the same [[cowApplyChanges]] / [[lakeChanges]] every
+    // flat table goes through (partition-first pruning). v1 is
     // status-partitioned ('O'/'F'/'P' + a ghost partition 'X') with a
     // banded perturbation confined to TWO partitions; one CDC batch
     // (U: restore 'F'-band prices; I: the missing 'O'-band %11 rows;
@@ -4924,35 +5005,35 @@ object Sync {
             col("o_orderkey") % 5 === 0,
             col("o_totalprice") + 500.0).otherwise(col("o_totalprice")))
         .unionByName(ghosts)
-      require(PartLake.publishPartitioned(s,
+      require(publish(s,
         v1.repartitionByRange(8, col("o_orderstatus"), col("o_orderkey"))
           .sortWithinPartitions("o_orderstatus", "o_orderkey"),
-        root, 1, "o_orderstatus", _.head(1).nonEmpty),
+        root, 1, _.head(1).nonEmpty, Some("o_orderstatus")),
         "y49: partitioned publish refused")
-      PartLake.writeFileStats(s, s"$root/v1", "o_orderkey",
-        "o_orderstatus")
+      writeFileStats(s, s"$root/v1", "o_orderkey")
       val batch = proj.filter(band && col("o_orderstatus") === "O" &&
           col("o_orderkey") % 11 === 0).withColumn("op", lit("I"))
         .unionByName(proj.filter(band && col("o_orderstatus") === "F" &&
           col("o_orderkey") % 5 === 0).withColumn("op", lit("U")))
         .unionByName(ghosts.withColumn("op", lit("D")))
         .withColumn("version", lit(1L))
-      val rep = PartLake.cowApplyChanges(s, root, 1, 2, "o_orderkey",
-        "o_orderstatus", batch)
+      val rep = cowApplyChanges(s, root, 1, 2, "o_orderkey", batch)
       require(rep.published, s"y49: cow publish refused: $rep")
-      val (cdf, scanned, total) = PartLake.lakeChanges(s, root, 1, 2,
-        "o_orderkey", "o_orderstatus")
-      val opMix = cdf.groupBy("op").count().collect()
+      val cdf = lakeChanges(s, root, 1, 2, "o_orderkey")
+      def nParts(files: Seq[String]) =
+        files.map(_.split("/", 2)(0)).distinct.size
+      val opMix = cdf.changes.groupBy("op").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val (_, cur) = readPublished(s, root)
       cur.groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_rows"),
           Det.dsum(col("o_totalprice")).as("sum_price"))
-        .withColumn("partition_pruned",
-          lit(rep.nPartsTouched < rep.nPartsTotal))
+        .withColumn("partition_pruned", lit(nParts(rep.rewritten) <
+          nParts(rep.rewritten ++ rep.untouched)))
         .withColumn("file_pruned",
           lit(rep.nFilesRewritten < rep.nFilesTotal))
-        .withColumn("cdf_pruned", lit(scanned < total))
+        .withColumn("cdf_pruned", lit(cdf.scannedFrom + cdf.scannedTo <
+          cdf.totalFrom + cdf.totalTo))
         .withColumn("cdf_mix_real", lit(
           opMix.getOrElse("I", 0L) > 0 && opMix.getOrElse("U", 0L) > 0 &&
             opMix.getOrElse("D", 0L) > 0))

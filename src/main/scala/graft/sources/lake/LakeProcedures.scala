@@ -91,62 +91,21 @@ private[lake] object LakeProcedures {
         throw new IllegalStateException(
           s"graftlake: no published version under $tableRoot"))
         .stripPrefix("v").toInt
-      // the live version's PARTITION COLUMN, from the manifest's
-      // relative file names (part=<v>/<name>) — zero listing; a flat
-      // version answers None and routes through the flat primitives
-      def livePartCol: Option[String] = {
-        val fs = new org.apache.hadoop.fs.Path(tableRoot)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val sp = new org.apache.hadoop.fs.Path(
-          s"$tableRoot/v$liveV/_file_stats")
-        val fromManifest =
-          if (!fs.exists(sp)) None
-          else spark.read.parquet(sp.toString).select("file")
-            .collect().map(_.getString(0))
-            .collectFirst { case n if n.contains("=") =>
-              n.split("=", 2)(0) }
-        fromManifest.orElse {
-          val vd = new org.apache.hadoop.fs.Path(s"$tableRoot/v$liveV")
-          if (!fs.exists(vd)) None
-          else fs.listStatus(vd).collectFirst {
-            case st if st.isDirectory &&
-              st.getPath.getName.contains("=") =>
-              st.getPath.getName.split("=", 2)(0)
-          }
-        }
-      }
-      // dv_fold rewrites through the FLAT cow path; a partitioned
-      // version cannot legally carry the flat keyed DV it folds —
-      // refuse loudly rather than flatten the layout
-      def refusePartitioned(): Unit =
-        if (livePartCol.nonEmpty)
-          throw new UnsupportedOperationException(
-            s"graftlake: procedure $procName on a PARTITIONED version " +
-              s"would flatten its part= layout — not supported; " +
-              "partitioned rewrites are graft.ops.PartLake's job")
       val (schema, row): (StructType, Seq[Any]) = procName match {
         case "compact" =>
           val v = liveV
           val target = input.getInt(1).toLong * 1024 * 1024
-          // partitioned tables route to the per-partition bin-pack —
-          // same span-adjacent grouping, partition layout preserved
-          val (nTotal, nRewritten, published) = livePartCol match {
-            case Some(pc) =>
-              val rep = graft.ops.PartLake.compact(spark, tableRoot,
-                v, v + 1, key, pc, target)
-              (rep.nFilesTotal, rep.nFilesRewritten, rep.published)
-            case None =>
-              val rep = Sync.compactPublished(spark, tableRoot,
-                v, v + 1, key, target)
-              (rep.nFilesTotal, rep.nFilesRewritten, rep.published)
-          }
+          // partitioned versions bin-pack per partition, layout kept
+          val rep = Sync.compactPublished(spark, tableRoot,
+            v, v + 1, key, target)
           (StructType(Seq(
             StructField("from_version", IntegerType),
             StructField("to_version", IntegerType),
             StructField("total_files", IntegerType),
             StructField("rewritten_files", IntegerType),
             StructField("published", BooleanType))),
-            Seq(v, v + 1, nTotal, nRewritten, published))
+            Seq(v, v + 1, rep.nFilesTotal, rep.nFilesRewritten,
+              rep.published))
         case "gc" =>
           val rep = Sync.gcPublished(spark, tableRoot, input.getInt(1))
           (StructType(Seq(
@@ -156,8 +115,16 @@ private[lake] object LakeProcedures {
             Seq(rep.deleted.size, rep.pinnedKept.size,
               rep.trimmedPtrGens.size))
         case "dv_fold" =>
-          refusePartitioned()
           val v = liveV
+          // the fold rewrites through the flat-only cowApply and a
+          // deletion vector is keyed on the key alone, while a
+          // partitioned row's identity is (partition, key): refuse
+          // rather than flatten the <col>=<v>/ layout
+          if (Sync.partColOf(spark, tableRoot, s"v$v").nonEmpty)
+            throw new UnsupportedOperationException(
+              "graftlake: procedure dv_fold on a PARTITIONED version is " +
+                "not supported — the fold is a flat-only rewrite and a " +
+                "deletion vector is keyed on the key alone")
           val fs = new org.apache.hadoop.fs.Path(tableRoot)
             .getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (!fs.exists(new org.apache.hadoop.fs.Path(

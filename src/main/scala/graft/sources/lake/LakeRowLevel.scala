@@ -60,10 +60,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * D(old identity) + I(new row) with the delete stamped before the
   * insert, so latest-wins application nets to a correct move — a
   * cross-partition UPDATE deletes from the old partition and inserts
-  * into the new one. Partitioned versions commit through
-  * [[graft.ops.PartLake.cowApplyChanges]] (partition-first pruning,
-  * same batch shape); a version without the `key` option refuses at
-  * planning, loudly.
+  * into the new one. Both layouts commit through
+  * [[graft.ops.Sync.cowApplyChanges]] (partition-first pruning on a
+  * partitioned version, same batch shape); a version without the `key`
+  * option refuses at planning, loudly.
   */
 final class LakeRowLevelBuilder(ref: LakeRef, info: RowLevelOperationInfo)
     extends RowLevelOperationBuilder {
@@ -100,7 +100,7 @@ final class LakeRowLevelOperation(ref: LakeRef, cmd: Command, key: String)
   /** Row identity: the lake key — plus the partition column on a y49
     * partitioned version, where (partition, key) is the identity the
     * cow path routes by (a cross-partition move is a D+I pair; see
-    * [[graft.ops.PartLake.cowApplyChanges]]). Carrying the partition
+    * [[graft.ops.Sync.cowApplyChanges]]). Carrying the partition
     * in the id also puts it on DELETE's wire, which partition-first
     * pruning needs. */
   override def rowId(): Array[NamedReference] =
@@ -162,14 +162,8 @@ final class LakeDeltaBatchWrite(ref: LakeRef, key: String)
         .parquet(files: _*)
         .withColumn("version",
           when(col("op") === "D", lit(1L)).otherwise(lit(2L)))
-      val published = ref.partCol match {
-        // y49 partitioned version: the partition-first cow path —
-        // same batch shape, identity (partition, key)
-        case Some(pc) => graft.ops.PartLake.cowApplyChanges(spark,
-          ref.root, fromV, fromV + 1, key, pc, changes).published
-        case None => graft.ops.Sync.cowApplyChanges(spark, ref.root,
-          fromV, fromV + 1, key, changes).published
-      }
+      val published = graft.ops.Sync.cowApplyChanges(spark, ref.root,
+        fromV, fromV + 1, key, changes).published
       if (!published) throw new IllegalStateException(
         "graftlake: the cow publish was refused (validation failed or " +
           "a concurrent publisher staged the same version) — no " +

@@ -152,7 +152,7 @@ object LakeRef {
     // one metadata file — ZERO listing RPCs on the read path, and
     // zero-copy carried files (living in older version dirs) plan
     // correctly. Legacy/absent manifests fall back to the dir listing.
-    val manifestRows: Option[Array[org.apache.spark.sql.Row]] = {
+    val manifest: Option[Sync.LocalManifest] = {
       val statsPath = new Path(s"$dir/_file_stats")
       if (!fs.exists(statsPath)) None
       else {
@@ -160,7 +160,7 @@ object LakeRef {
         // loads — every SQL statement resolves the table — cost one
         // listing, zero read jobs
         val lm = graft.ops.Sync.manifestLocal(spark, root, vName)
-        if (lm.rawHasDirBytes) Some(lm.rows.toArray) else None
+        if (lm.rawHasDirBytes) Some(lm) else None
       }
     }
     // The key column — and the partition column, when present —
@@ -173,69 +173,34 @@ object LakeRef {
       s"graftlake: $dir carries a null-partition sentinel — the " +
         "partition column is part of row identity and must be " +
         "non-null; route null partitions to an explicit value")
-    val (partCol: Option[String], files: Seq[FileStat]) =
-      manifestRows match {
-        case Some(rows) =>
-          val names = rows.map(_.getAs[String]("file"))
-          val pc = names.collectFirst {
-            case n if n.contains("=") => n.split("=", 2)(0)
-          }
-          refuseNullPart(names.exists(
-            _.contains("=__HIVE_DEFAULT_PARTITION__/")))
-          val fl = rows.sortBy(_.getAs[String]("file")).map { r =>
-            val n = r.getAs[String]("file")
-            val pv =
-              if (n.contains("=") && n.contains("/"))
-                Some(n.split("/", 2)(0).split("=", 2)(1))
-              else None
-            FileStat(n, Option(r.getAs[Any]("kmin")),
-              Option(r.getAs[Any]("kmax")), r.getAs[Long]("n_rows"),
-              r.getAs[Long]("bytes"), pv,
-              Some(r.getAs[String]("dir")))
-          }.toSeq
-          (pc, fl)
-        case None =>
-          val partDirs = fs.listStatus(new Path(dir)).toSeq
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.contains("="))
-          val pc = partDirs.headOption
-            .map(_.getPath.getName.split("=", 2)(0))
-          refuseNullPart(partDirs.exists(_.getPath.getName
-            .endsWith("=__HIVE_DEFAULT_PARTITION__")))
-          // (relative name, partition value, size) per data file
-          val statuses: Seq[(String, Option[String], Long)] = pc match {
-            case None =>
-              fs.listStatus(new Path(dir)).toSeq
-                .filter(st => st.isFile &&
-                  st.getPath.getName.startsWith("part-"))
-                .map(st => (st.getPath.getName, None, st.getLen))
-            case Some(_) =>
-              partDirs.flatMap { pd =>
-                val pv = pd.getPath.getName.split("=", 2)(1)
-                fs.listStatus(pd.getPath).toSeq
-                  .filter(st => st.isFile &&
-                    st.getPath.getName.startsWith("part-"))
-                  .map(st =>
-                    (s"${pd.getPath.getName}/${st.getPath.getName}",
-                      Some(pv), st.getLen))
-              }
-          }
-          // a LEGACY manifest still feeds spans/row counts
-          val spans: Map[String, (Option[Any], Option[Any], Long)] =
-            if (!fs.exists(new Path(s"$dir/_file_stats"))) Map.empty
-            else graft.ops.Sync.manifestLocal(spark, root, vName).rows
-              .map { r =>
-                r.getAs[String]("file") ->
-                  (Option(r.getAs[Any]("kmin")),
-                    Option(r.getAs[Any]("kmax")),
-                    r.getAs[Long]("n_rows"))
-              }.toMap
-          val fl = statuses.sortBy(_._1).map { case (n, pv, len) =>
-            val (lo, hi, rows) = spans.getOrElse(n, (None, None, -1L))
-            FileStat(n, lo, hi, rows, len, pv)
-          }
-          (pc, fl)
-      }
+    val listed: Seq[FileStat] = manifest match {
+      case Some(lm) => lm.rows.map(r => FileStat(r.getAs[String]("file"),
+        Option(r.getAs[Any]("kmin")), Option(r.getAs[Any]("kmax")),
+        r.getAs[Long]("n_rows"), r.getAs[Long]("bytes"),
+        dir = Some(r.getAs[String]("dir"))))
+      case None =>
+        // a LEGACY manifest still feeds spans/row counts
+        val spans: Map[String, (Option[Any], Option[Any], Long)] =
+          if (!fs.exists(new Path(s"$dir/_file_stats"))) Map.empty
+          else graft.ops.Sync.manifestLocal(spark, root, vName).rows
+            .map { r =>
+              r.getAs[String]("file") ->
+                (Option(r.getAs[Any]("kmin")),
+                  Option(r.getAs[Any]("kmax")),
+                  r.getAs[Long]("n_rows"))
+            }.toMap
+        Sync.dataFiles(fs, dir).map { case (st, n) =>
+          val (lo, hi, rows) = spans.getOrElse(n, (None, None, -1L))
+          FileStat(n, lo, hi, rows, st.getLen)
+        }
+    }
+    val partCol = Sync.partColIn(listed.map(_.name))
+    refuseNullPart(listed.exists(
+      _.name.contains("=__HIVE_DEFAULT_PARTITION__/")))
+    // a partitioned file's value is its `<col>=<v>/` dir's rendering
+    val files = listed.sortBy(_.name).map(f =>
+      if (partCol.isEmpty) f
+      else f.copy(part = Some(f.name.split("/", 2)(0).split("=", 2)(1))))
     // versionSchema resolves a metadata-only version (zero local data
     // files) through its manifest; partitioned schemas include the
     // inferred partition column either way.

@@ -474,7 +474,6 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned version (y49): partition + span pruning, constant partition vectors") {
-    import graft.ops.PartLake
     spark
     val r = ops.Sources.stage("lakesrc_part/orders_p")
     val fs = new org.apache.hadoop.fs.Path(r)
@@ -482,10 +481,10 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
     fs.delete(new org.apache.hadoop.fs.Path(r), true)
     val proj = Tables.orders(spark, sf).select(
       "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    assert(PartLake.publishPartitioned(spark,
+    assert(ops.Sync.publish(spark,
       proj.repartitionByRange(3, col(key)).sortWithinPartitions(key),
-      r, 1, "o_orderstatus", _.head(1).nonEmpty))
-    PartLake.writeFileStats(spark, s"$r/v1", key, "o_orderstatus")
+      r, 1, _.head(1).nonEmpty, Some("o_orderstatus")))
+    ops.Sync.writeFileStats(spark, s"$r/v1", key)
     val df = spark.read.format("graftlake")
       .option("path", r).option("key", key).load()
     // content law incl. the constant partition column
@@ -600,7 +599,6 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned lake emits its feed too; replay law holds with the partition column") {
-    import graft.ops.PartLake
     spark
     val r = ops.Sources.stage("lakesrc_cdf/part")
     val fs = new org.apache.hadoop.fs.Path(r)
@@ -609,18 +607,17 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
     Sync.enableCdf(spark, r)
     val proj = Tables.orders(spark, sf).select(
       "o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
-    assert(PartLake.publishPartitioned(spark,
+    assert(ops.Sync.publish(spark,
       proj.repartitionByRange(3, col(key)).sortWithinPartitions(key),
-      r, 1, "o_orderstatus", _.head(1).nonEmpty))
-    PartLake.writeFileStats(spark, s"$r/v1", key, "o_orderstatus")
+      r, 1, _.head(1).nonEmpty, Some("o_orderstatus")))
+    ops.Sync.writeFileStats(spark, s"$r/v1", key)
     val batch = proj.filter(col(key) % 8 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + 2.0)
       .withColumn("op", lit("U"))
       .unionByName(proj.filter(col(key) % 19 === 0 && col(key) % 8 =!= 0)
         .withColumn("op", lit("D")))
       .withColumn("version", lit(1L))
-    assert(PartLake.cowApplyChanges(spark, r, 1, 2, key,
-      "o_orderstatus", batch).published)
+    assert(Sync.cowApplyChanges(spark, r, 1, 2, key, batch).published)
     // v1 snapshot feed carries the partition column; v2 feed = the batch
     val feed = spark.read.format("graftlake-cdf").option("path", r).load()
     assert(feed.schema.fieldNames.contains("o_orderstatus"))
@@ -758,7 +755,6 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
   }
 
   test("GROUP BY partition aggregate answers per-partition from the manifest") {
-    import graft.ops.PartLake
     spark
     val r = ops.Sources.stage("lakesrc_part_agg/orders_pa")
     val fs = new org.apache.hadoop.fs.Path(r)
@@ -766,10 +762,10 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
     fs.delete(new org.apache.hadoop.fs.Path(r), true)
     val proj = Tables.orders(spark, sf).select(
       "o_orderkey", "o_custkey", "o_orderstatus")
-    assert(PartLake.publishPartitioned(spark,
+    assert(ops.Sync.publish(spark,
       proj.repartitionByRange(3, col(key)).sortWithinPartitions(key),
-      r, 1, "o_orderstatus", _.head(1).nonEmpty))
-    PartLake.writeFileStats(spark, s"$r/v1", key, "o_orderstatus")
+      r, 1, _.head(1).nonEmpty, Some("o_orderstatus")))
+    ops.Sync.writeFileStats(spark, s"$r/v1", key)
     val df = spark.read.format("graftlake")
       .option("path", r).option("key", key).load()
     val agg = df.groupBy("o_orderstatus")
@@ -946,9 +942,9 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
     fs.delete(new org.apache.hadoop.fs.Path(pr), true)
     val proj = Tables.orders(spark, sf)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    assert(ops.PartLake.publishPartitioned(spark, proj, pr, 1,
-      "o_orderstatus", _.head(1).nonEmpty))
-    ops.PartLake.writeFileStats(spark, s"$pr/v1", key, "o_orderstatus")
+    assert(ops.Sync.publish(spark, proj, pr, 1, _.head(1).nonEmpty,
+      Some("o_orderstatus")))
+    ops.Sync.writeFileStats(spark, s"$pr/v1", key)
     val parent = new java.io.File(pr).getParent
     // fresh catalog name: a catalog caches its options at first use
     spark.conf.set("spark.sql.catalog.gpart",
@@ -1131,10 +1127,10 @@ class LakeSourceSuite extends AnyFunSuite with SparkFixture {
     fs.delete(new org.apache.hadoop.fs.Path(pr2), true)
     val pproj = Tables.orders(spark, sf)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    assert(ops.PartLake.publishPartitioned(spark,
-      pproj.repartition(4), pr2, 1, "o_orderstatus",
-      _.head(1).nonEmpty))
-    ops.PartLake.writeFileStats(spark, s"$pr2/v1", key, "o_orderstatus")
+    assert(ops.Sync.publish(spark,
+      pproj.repartition(4), pr2, 1, _.head(1).nonEmpty,
+      Some("o_orderstatus")))
+    ops.Sync.writeFileStats(spark, s"$pr2/v1", key)
     val before = spark.read.parquet(s"$pr2/v1/_file_stats").count()
     val pcomp = spark.sql(
       "CALL gproc.system.compact(table => 'orders_pm')").collect()(0)

@@ -2366,13 +2366,15 @@ class OperatorSuite extends AnyFunSuite with SparkFixture {
     // span-only pruning (flat y38) would touch every partition
     val v1 = Seq(("a", 1L, 10.0), ("a", 2L, 20.0),
       ("b", 1L, 100.0), ("b", 2L, 200.0)).toDF("p", "k", "x")
-    assert(PartLake.publishPartitioned(spark, v1.repartition(1), root, 1,
-      "p", _.head(1).nonEmpty))
-    PartLake.writeFileStats(spark, s"$root/v1", "k", "p")
+    assert(Sync.publish(spark, v1.repartition(1), root, 1,
+      _.head(1).nonEmpty, Some("p")))
+    Sync.writeFileStats(spark, s"$root/v1", "k")
+    def nParts(files: Seq[String]) = files.map(_.split("/", 2)(0)).distinct.size
     val b1 = Seq(("a", 1L, 11.0, "U", 1L)).toDF("p", "k", "x", "op", "version")
-    val rep = PartLake.cowApplyChanges(spark, root, 1, 2, "k", "p", b1)
+    val rep = Sync.cowApplyChanges(spark, root, 1, 2, "k", b1)
     assert(rep.published && rep.nFilesRewritten == 1 &&
-      rep.nPartsTouched == 1 && rep.nPartsTotal == 2,
+      nParts(rep.rewritten) == 1 &&
+      nParts(rep.rewritten ++ rep.untouched) == 2,
       s"partition-first prune failed: $rep")
     val bFiles = rep.untouched.filter(_.startsWith("p=b"))
     assert(bFiles.nonEmpty, s"partition b should carry: $rep")
@@ -2399,8 +2401,8 @@ class OperatorSuite extends AnyFunSuite with SparkFixture {
     // delete in b rewrites only b's file
     val b2 = Seq(("c", 5L, 500.0, "I", 1L), ("b", 2L, 0.0, "D", 1L))
       .toDF("p", "k", "x", "op", "version")
-    val rep2 = PartLake.cowApplyChanges(spark, root, 2, 3, "k", "p", b2)
-    assert(rep2.published && rep2.nPartsTouched == 1,
+    val rep2 = Sync.cowApplyChanges(spark, root, 2, 3, "k", b2)
+    assert(rep2.published && nParts(rep2.rewritten) == 1,
       s"frontier insert should touch no existing partition: $rep2")
     assert(snap() == Set(("a", 1L, 11.0), ("a", 2L, 20.0),
       ("b", 1L, 100.0), ("c", 5L, 500.0)), s"v3 content wrong: ${snap()}")
@@ -2409,13 +2411,173 @@ class OperatorSuite extends AnyFunSuite with SparkFixture {
       .select("part").distinct().collect().map(_.getString(0)).toSet
     assert(m3 == Set("a", "b", "c"), s"v3 manifest partitions: $m3")
     // partitioned CDF: net ops, partition-local scan (a's file carried)
-    val (cdf, scanned, total) = PartLake.lakeChanges(spark, root, 2, 3,
-      "k", "p")
-    val ops = cdf.collect()
+    val cdf = Sync.lakeChanges(spark, root, 2, 3, "k")
+    val ops = cdf.changes.collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(ops == Set(("I", "c", 5L), ("D", "b", 2L)),
       s"partitioned CDF wrong: $ops")
-    assert(scanned < total, s"CDF scanned all files: $scanned/$total")
+    assert(cdf.scannedFrom + cdf.scannedTo < cdf.totalFrom + cdf.totalTo,
+      s"CDF scanned all files: $cdf")
+  }
+
+  test("cow persist law: a refused cowApplyChanges leaves no cached frame behind") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cowleak")
+      .toString + "/t"
+    // a version with no data files, hence an empty manifest
+    new org.apache.hadoop.fs.Path(s"$root/v1")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .mkdirs(new org.apache.hadoop.fs.Path(s"$root/v1"))
+    Sync.writeFileStats(spark, s"$root/v1", "k")
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    val batch = Seq((1L, 1.0, "I", 1L)).toDF("k", "x", "op", "version")
+    intercept[IllegalArgumentException] {
+      Sync.cowApplyChanges(spark, root, 1, 2, "k", batch)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the refused mutation left its resolved batch in the cache")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the refused mutation left a persisted RDD behind")
+  }
+
+  test("flat = partitioned law: one I/U/D batch with a cross-partition move, compaction and the change feed agree across layouts") {
+    val spark0 = spark
+    import spark0.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_flatpart")
+      .toString
+    val (flat, part) = (s"$base/flat", s"$base/part")
+    // every partition spans the whole key range, two files each
+    val v1 = (1L to 30L).map(k => (Seq("a", "b", "c")((k % 3).toInt), k,
+      k * 10.0)).toDF("p", "k", "x").repartitionByRange(2, col("k"))
+    assert(Sync.publish(spark, v1, flat, 1, _.head(1).nonEmpty))
+    assert(Sync.publish(spark, v1, part, 1, _.head(1).nonEmpty, Some("p")))
+    Seq(flat, part).foreach(r => Sync.writeFileStats(spark, s"$r/v1", "k"))
+    // U k=4 and D k=6 in place, I k=31 past every span, and k=7 moving
+    // from b to the new partition d: a D then an I under (p, k), the
+    // I winning latest-wins by key on the flat table
+    val batch = Seq(("b", 4L, 400.0, "U", 1L), ("a", 6L, 0.0, "D", 1L),
+      ("a", 31L, 310.0, "I", 1L), ("b", 7L, 0.0, "D", 1L),
+      ("d", 7L, 77.0, "I", 2L)).toDF("p", "k", "x", "op", "version")
+    val repF = Sync.cowApplyChanges(spark, flat, 1, 2, "k", batch)
+    val repP = Sync.cowApplyChanges(spark, part, 1, 2, "k", batch)
+    assert(repF.published && repP.published)
+    def rows(r: String): Set[(String, Long, Double)] =
+      Sync.readPublished(spark, r)._2.collect().map(x => (
+        x.getAs[String]("p"), x.getAs[Long]("k"), x.getAs[Double]("x")))
+        .toSet
+    val expected = v1.collect().map(x => (x.getString(0), x.getLong(1),
+      x.getDouble(2))).toSet.filterNot(t => Set(4L, 6L, 7L)(t._2)) ++
+      Set(("b", 4L, 400.0), ("a", 31L, 310.0), ("d", 7L, 77.0))
+    assert(rows(flat) == expected && rows(part) == expected)
+    // the partitioned rewrite stayed inside the touched partitions:
+    // c carries whole, d is pure frontier
+    val touched = repP.rewritten.map(_.split("/", 2)(0)).toSet
+    assert(touched.nonEmpty && touched.subsetOf(Set("p=a", "p=b")),
+      s"partitioned cow rewrote outside a and b: $repP")
+    assert(repP.untouched.count(_.startsWith("p=c/")) == 2, s"$repP")
+    // compaction: bins never cross a partition, content is invariant
+    val cF = Sync.compactPublished(spark, flat, 2, 3, "k", 64L << 20)
+    val cP = Sync.compactPublished(spark, part, 2, 3, "k", 64L << 20)
+    assert(cF.published && cP.published && cF.nFilesRewritten >= 2 &&
+      cP.nFilesRewritten >= 2, s"$cF / $cP")
+    assert(rows(flat) == expected && rows(part) == expected)
+    val m3 = Sync.manifestLocal(spark, part, "v3")
+    assert(m3.partCol.contains("p") && m3.rows.forall(r =>
+      r.getAs[String]("file").startsWith(s"p=${r.getAs[String]("part")}/")))
+    assert(m3.rows.map(_.getAs[String]("part")).toSet ==
+      Set("a", "b", "c", "d"))
+    // the change feed: compaction changes nothing on either side; over
+    // v1 → v3 the (op, key) multisets agree once the partitioned side's
+    // D+I pair for the moved key reads as the flat side's U
+    def opKeys(r: String, from: Int, to: Int): Seq[(String, Long)] =
+      Sync.lakeChanges(spark, r, from, to, "k").changes.select("op", "k")
+        .collect().map(x => (x.getString(0), x.getLong(1))).toSeq
+    assert(opKeys(flat, 2, 3).isEmpty && opKeys(part, 2, 3).isEmpty)
+    val opsP = opKeys(part, 1, 3)
+    assert(opsP.filter(_._2 == 7L).map(_._1).sorted == Seq("D", "I"))
+    val folded = opsP.groupBy(_._2).toSeq.map { case (k, os) =>
+      (if (os.size == 2) "U" else os.head._1, k) }
+    assert(opKeys(flat, 1, 3).sorted == folded.sorted &&
+      folded.sorted == Seq(("D", 6L), ("I", 31L), ("U", 4L), ("U", 7L)),
+      s"flat ${opKeys(flat, 1, 3)} vs partitioned $opsP")
+  }
+
+  test("cow broadcast-guard law: past spark.graft.cow.broadcastThreshold the change-key joins shuffle on both layouts, same result") {
+    import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val spark0 = spark
+    import spark0.implicits._
+    object H extends org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper
+    val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // the broadcast sides (build sides) of every join the mutation ran;
+    // the listener bus is FIFO, so once a marker query's plan arrives
+    // every earlier plan has too
+    def broadcastSides(run: => Unit): Seq[SparkPlan] = {
+      plans.synchronized(plans.clear())
+      run
+      spark.range(1).selectExpr("id AS guard_marker").collect()
+      org.scalatest.concurrent.Eventually.eventually(
+        org.scalatest.concurrent.PatienceConfiguration.Timeout(
+          org.scalatest.time.Span(30, org.scalatest.time.Seconds))) {
+        assert(plans.synchronized(plans.exists(
+          _.toString.contains("guard_marker"))))
+      }
+      plans.synchronized(plans.toList).flatMap(p =>
+        H.collect(p) { case b: BroadcastExchangeExec => b })
+    }
+    def fromManifest(b: SparkPlan): Boolean =
+      H.collect(b) { case l: LocalTableScanExec => l }
+        .exists(_.output.exists(_.name == "kmin"))
+    val auto = "spark.sql.autoBroadcastJoinThreshold"
+    val autoWas = spark.conf.getOption(auto)
+    spark.listenerManager.register(listener)
+    try {
+      // Spark's own size-based broadcast would hide the hint's effect
+      // on these tiny frames
+      spark.conf.set(auto, "-1")
+      val v1 = (1L to 40L).map(k => (if (k % 2 == 0) "a" else "b", k,
+        k.toDouble)).toDF("p", "k", "x").repartitionByRange(2, col("k"))
+      val batch = Seq(("a", 2L, -2.0, "U", 1L), ("b", 3L, 0.0, "D", 1L),
+        ("a", 50L, 50.0, "I", 1L)).toDF("p", "k", "x", "op", "version")
+      Seq(None, Some("p")).foreach { pc =>
+        def run(threshold: Option[String]): (Seq[SparkPlan], Set[String]) = {
+          val root = java.nio.file.Files.createTempDirectory("graft_bguard")
+            .toString + "/t"
+          assert(Sync.publish(spark, v1, root, 1, _.head(1).nonEmpty, pc))
+          Sync.writeFileStats(spark, s"$root/v1", "k")
+          threshold.fold(spark.conf.unset("spark.graft.cow.broadcastThreshold"))(
+            spark.conf.set("spark.graft.cow.broadcastThreshold", _))
+          val sides = broadcastSides(assert(
+            Sync.cowApplyChanges(spark, root, 1, 2, "k", batch).published))
+          (sides, Sync.readPublished(spark, root)._2.collect()
+            .map(r => s"${r.getAs[String]("p")}/${r.getAs[Long]("k")}/" +
+              s"${r.getAs[Double]("x")}").toSet)
+        }
+        val (dflt, dfltRows) = run(None)
+        val (guarded, guardedRows) = run(Some("1"))
+        assert(dflt.exists(!fromManifest(_)),
+          s"layout $pc: no change-key broadcast at the default threshold")
+        assert(guarded.nonEmpty && guarded.forall(fromManifest),
+          s"layout $pc: a change-key join broadcast past the threshold")
+        assert(guardedRows == dfltRows && dfltRows.size == 40,
+          s"layout $pc: the guarded run published different rows")
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.unset("spark.graft.cow.broadcastThreshold")
+      autoWas.fold(spark.conf.unset(auto))(spark.conf.set(auto, _))
+    }
   }
 
   test("R11 CDC publish-refusal law: a refused lake publish FAILS the batch instead of committing the checkpoint past lost changes") {

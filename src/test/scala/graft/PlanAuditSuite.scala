@@ -265,10 +265,10 @@ class PlanAuditSuite extends AnyFunSuite with SparkFixture {
       .toString + "/t"
     val proj = Tables.orders(spark, sf)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
-    assert(PartLake.publishPartitioned(spark,
+    assert(Sync.publish(spark,
       proj.repartitionByRange(4, col("o_orderstatus"), col("o_orderkey"))
         .sortWithinPartitions("o_orderstatus", "o_orderkey"),
-      root, 1, "o_orderstatus", _.head(1).nonEmpty))
+      root, 1, _.head(1).nonEmpty, Some("o_orderstatus")))
     val (_, cur) = Sync.readPublished(spark, root)
     def filesRead(df: DataFrame): Long = {
       df.collect()
