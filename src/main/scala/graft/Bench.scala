@@ -1,6 +1,11 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** A JSON number with `digits` decimals. `f"%.3f"` follows the JVM's
+    * default locale and would write `1,500` under a German one. */
+  private[graft] def num(v: Double, digits: Int = 3): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     EntryTuning.tuneEmbeddedDerby()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -203,7 +208,7 @@ object Bench {
     // Per-query timings go to a file + a non-final stdout line; the driver's
     // tail-capture window only reliably holds the LAST line, so the scored
     // summary is a compact (<200 char) total-only JSON line printed last.
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
     // Per-query spread (max/min over the COUNTED passes): ~1 means the
     // counted passes agreed; a large ratio means one of them still hit a
@@ -212,15 +217,15 @@ object Bench {
     val spread = p1.keys.flatMap { k =>
       val ok = counted.flatMap(_.get(k)).filter(_ > 0.0)
       if (ok.size >= 2)
-        Some("\"" + k + "\":" + f"${ok.max / ok.min}%.1f")
+        Some("\"" + k + "\":" + num(ok.max / ok.min, 1))
       else None
     }.mkString("{", ",", "}")
     // Full sentinel log (including retry-wait readings) -> file; compact
     // bracket-only list + per-pass health flags -> final stdout line.
-    val sentinelsFull = sentinelLog.map(v => f"$v%.3f").mkString("[", ",", "]")
-    val sentinels = bracketSentinels.map(v => f"$v%.3f").mkString("[", ",", "]")
+    val sentinelsFull = sentinelLog.map(num(_)).mkString("[", ",", "]")
+    val sentinels = bracketSentinels.map(num(_)).mkString("[", ",", "]")
     val passHealth = passHealthFinal.mkString("[", ",", "]")
-    val hmax = f"$healthyMax%.3f"
+    val hmax = num(healthyMax)
     val total = results.values.filter(_ >= 0.0).sum
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_queries.json"),
@@ -235,7 +240,7 @@ object Bench {
     // stay byte-compatible.
     locally {
       val entries = results.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+        .map { case (k, v) => "\"" + k + "\":" + num(v) }
       val chunks = scala.collection.mutable.ArrayBuffer[Seq[String]]()
       var cur = scala.collection.mutable.ArrayBuffer[String]()
       var len = 0
@@ -253,6 +258,6 @@ object Bench {
     }
     println(s"""{"spread":$spread}""")
     spark.stop()
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_failed":$failed,"sentinel_sec":$sentinels,"pass_healthy":$passHealth,"healthy_max":$hmax,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${results.size},"n_failed":$failed,"sentinel_sec":$sentinels,"pass_healthy":$passHealth,"healthy_max":$hmax,"sf":"$sfDir"}""")
   }
 }

@@ -659,11 +659,16 @@ object Sync {
     * never scanning data files. The feed is the applied batch, not the
     * minimal net diff (a U identical to the current row still rides);
     * replay-idempotent MERGE consumers converge on either, and
-    * consumers needing minimal diffs keep y41. Layout-only publishes
-    * (compaction, evolution, DV folds) stage an EMPTY feed — "this
-    * version changed no logical row" stated positively, so a reader
-    * can tell "no change" from "feed missing" (= the version predates
-    * enablement, or a non-CDF writer published it → reseed). Snapshot
+    * consumers needing minimal diffs keep y41. One rule trims it: a D
+    * whose key the source version's deletion vector already hides
+    * changes no logical row, so it stays out of the feed (dvDelete's
+    * rule for re-deleted keys, applied by [[cowApplyChanges]] too). A
+    * DV fold is a D batch of exactly those keys, so its feed comes out
+    * EMPTY by that rule. Layout-only publishes (compaction, evolution)
+    * stage an empty feed outright — "this version changed no logical
+    * row" stated positively, so a reader can tell "no change" from
+    * "feed missing" (= the version predates enablement, or a non-CDF
+    * writer published it → reseed). Snapshot
     * publishes emit `I` for v1 (the bootstrap) and a leading `T`
     * (truncate) sentinel + `I` for later reseeds. */
   private[graft] def enableCdf(s: SparkSession, root: String): Unit = {
@@ -679,17 +684,23 @@ object Sync {
     fs.exists(new org.apache.hadoop.fs.Path(s"$root/_cdf_enabled"))
 
   /** Stage a version's change feed: null-fill logical columns the batch
-    * doesn't carry (a delete needs only its key), stamp the version. */
+    * doesn't carry, stamp the version. */
   private[graft] def stageChanges(s: SparkSession, stagingDir: String,
       logical: org.apache.spark.sql.types.StructType, rows: DataFrame,
-      toVersion: Int): Unit = {
+      toVersion: Int): Unit =
+    nullFilled(logical, rows, col("op"),
+        lit(toVersion.toLong).as("_commit_version"))
+      .write.mode("overwrite").parquet(s"$stagingDir/_changes")
+
+  /** `rows` projected onto `logical` — columns it lacks read null (a
+    * delete needs only its key) — followed by `extra`. */
+  private def nullFilled(logical: org.apache.spark.sql.types.StructType,
+      rows: DataFrame, extra: org.apache.spark.sql.Column*): DataFrame = {
     val present = rows.columns.toSet
-    val proj = logical.fields.toIndexedSeq.map { f =>
-      if (present.contains(f.name)) col(f.name)
+    rows.select(logical.fields.toIndexedSeq.map { f =>
+      if (present(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
-    } :+ col("op") :+ lit(toVersion.toLong).as("_commit_version")
-    rows.select(proj: _*).write.mode("overwrite")
-      .parquet(s"$stagingDir/_changes")
+    } ++ extra: _*)
   }
 
   private[graft] def stageEmptyChanges(s: SparkSession,
@@ -707,31 +718,6 @@ object Sync {
       nFilesTotal: Int, nFilesRewritten: Int,
       rewritten: Seq[String], untouched: Seq[String])
 
-  /** Y38: COPY-ON-WRITE row-level DELETE/UPDATE — the one mutation
-    * primitive between "append-only" and "full snapshot swap". Given a
-    * keyed change set (delete keys + replacement rows), it:
-    *
-    *  1. PRUNES: joins the change keys against the tiny `_file_stats`
-    *     manifest (broadcast — one row per file) on key∈[kmin,kmax];
-    *     only files whose span can contain a changed key are touched.
-    *     The base table is NEVER scanned to find them.
-    *  2. REWRITES only that subset: broadcast left-join applies the
-    *     replacement columns (change sets are delta-sized — small by
-    *     definition; a table-sized rewrite belongs to y2/y5), broadcast
-    *     anti-join drops deleted keys, `sortWithinPartitions(key)`
-    *     keeps the range-clustered layout so the NEXT mutation prunes
-    *     just as well.
-    *  3. CARRIES every untouched file into the new version VERBATIM
-    *     (byte copy preserving names — at 100 TB on an object store
-    *     this is the manifest trick or a server-side copy, never a
-    *     re-encode; the law test pins names+sizes unchanged) and their
-    *     manifest rows with them, so manifest maintenance costs one
-    *     scan of the REWRITTEN files only.
-    *  4. PUBLISHES via the y36 staged swap: readers see the old version
-    *     or the new one, never a mix, and the old version stays live
-    *     for rollback/time-travel until y37 GC reaps it.
-    *
-    * GDPR-delete and CDC-into-lake both land exactly here. */
   /** Broadcast a CHANGE-SET frame only while its planner estimate fits
     * `spark.graft.cow.broadcastThreshold` (bytes, default 512 MB —
     * far above any churn-sized batch, far below the 8 GB broadcast
@@ -749,129 +735,65 @@ object Sync {
     if (est <= thr) broadcast(df) else df
   }
 
+  /** (file, dir) of the manifest rows whose key span can hold one of
+    * `keys`: the delta-sized keys join the broadcast manifest, and the
+    * hits collect to the driver (bounded by file count). */
+  private def spanHits(stats: DataFrame, keys: DataFrame,
+      key: String): Seq[(String, String)] =
+    keys.join(broadcast(stats),
+        col(key) >= col("kmin") && col(key) <= col("kmax"))
+      .select("file", "dir").distinct()
+      .collect().map(r => (r.getString(0), r.getString(1)))
+      .sortBy(_._1).toSeq
+
+  /** The keys of version dir `dir`'s deletion vector, if it has one. */
+  private def dvOf(s: SparkSession, dir: String,
+      key: String): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/_deletes")
+    if (!p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(s.read.parquet(p.toString).select(col(key)))
+  }
+
+  /** `df` minus version dir `dir`'s deletion vector: a broadcast
+    * anti-join, the DV being delete-sized by the y40 contract. */
+  private def minusDv(s: SparkSession, dir: String, key: String,
+      df: DataFrame): DataFrame =
+    dvOf(s, dir, key).fold(df)(dv =>
+      df.join(broadcast(dv), Seq(key), "left_anti"))
+
+  /** Y38: COPY-ON-WRITE row-level DELETE/UPDATE with SQL UPDATE
+    * semantics — `updates` holds the key and the columns to set (a
+    * null keeps the old value), `deletes` the keys to drop. It builds
+    * the keyed I/U/D batch and commits it through [[cowApplyChanges]]:
+    * manifest-pruned rewrite of the touched files only, every other
+    * file carried by reference, one staged swap. The U rows are the
+    * LOGICAL rows of the update keys (manifest-pruned read, deletion
+    * vector subtracted) with the update columns laid over them, so an
+    * absent key or a DV'd ghost yields no row — the SQL no-op. D is
+    * stamped above U: a key in both ends deleted. */
   private[graft] def cowApply(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String,
-      deletes: DataFrame, updates: DataFrame,
-      carryDeletes: Boolean = true,
-      logicalCdf: Boolean = true): CowReport = {
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(root).getFileSystem(conf)
+      deletes: DataFrame, updates: DataFrame): CowReport = {
     val fromDir = s"$root/v$fromVersion"
-    // ONE manifest read; every further use is driver-local (the
-    // pre-r13 shape re-read the parquet sidecar 3x per mutation)
+    val logical = versionSchema(s, fromDir)
     val statsL = manifestLocal(s, root, s"v$fromVersion")
-    val stats = statsL.df(s)
-    // the change frames are consumed 2-3x each (prune keys, rewrite
-    // joins, CDF feed); each consumption re-derived them from their
-    // source scans pre-r14 — persist the churn-sized frames for the
-    // mutation's duration instead (guide §1.2: don't recompute what
-    // you already have; unpersisted before return)
-    val updP = updates.persist()
-    val delKeys = deletes.select(col(key)).persist()
-    var appliedCached: DataFrame = null
-    try {
-      val changeKeys = delKeys
-        .unionByName(updP.select(col(key))).distinct()
-      // (file, physical dir) pairs — a carried file may live several
-      // versions back; the manifest knows, the dir listing never would
-      val affectedFD = changeKeys.join(broadcast(stats),
-          col(key) >= col("kmin") && col(key) <= col("kmax"))
-        .select("file", "dir").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
-        .sortBy(_._1).toSeq // bounded by file count
-      val affected = affectedFD.map(_._1)
-      val affectedSet = affected.toSet
-      val untouched = statsL.files.sorted.diff(affected)
-      val staging = new Path(s"$root/_staging_v$toVersion")
-      fs.delete(staging, true)
-      // CDF U post-images come from the REWRITE OUTPUT (cached), not a
-      // re-read of the staged files — one less churn-sized scan per
-      // CDF-enabled publish (r13 residual #2)
-      val wantCdf = cdfEnabled(fs, root)
-      if (affected.isEmpty) fs.mkdirs(staging)
-      else {
-        // the version's LOGICAL schema: post-evolution files and
-        // pre-evolution carries merge cleanly, added columns read null
-        val base = s.read.schema(versionSchema(s, fromDir))
-          .parquet(affectedFD.map { case (f, d) => s"$root/$d/$f" }: _*)
-        val updCols = updates.columns.filterNot(_ == key).toSeq
-        val upd = updP.select(col(key) +:
-          updCols.map(c => col(c).as(s"__upd_$c")): _*)
-        val applied0 = base.join(maybeBroadcast(upd), Seq(key), "left")
-        val applied = updCols.foldLeft(applied0) { (df, c) =>
-            df.withColumn(c, coalesce(col(s"__upd_$c"), col(c)))
-          }.drop(updCols.map("__upd_" + _): _*)
-          .join(maybeBroadcast(delKeys.distinct()), Seq(key), "left_anti")
-          .select(base.columns.map(col).toIndexedSeq: _*)
-        val toWrite =
-          if (wantCdf && logicalCdf) { appliedCached = applied.persist(); appliedCached }
-          else applied
-        toWrite.sortWithinPartitions(key)
-          .write.mode("overwrite").parquet(staging.toString)
-      }
-      // ZERO-COPY CARRY: untouched files are never copied — their
-      // manifest rows (still naming the dirs they live in) ride into the
-      // staged manifest; only the rewritten files are new bytes. The
-      // carried set filters by the CHURN-sized affected list (an isin
-      // over "untouched" would be a million-literal expression at scale)
-      val carriedL = statsL.filterFiles(!affectedSet(_))
-      val newRows = writeStagedManifest(s, root, toVersion, key,
-        carriedL.df(s))
-      // Y55 feed (staged while the dir holds ONLY rewritten files):
-      // U = post-images of updated keys MINUS the deletion vector — an
-      // update of a DV'd ghost is the SQL no-op, the logical row did NOT
-      // change and a mirror fed that U would drift; D = the delete keys
-      // (a D of an already-DV'd key replays as a no-op downstream).
-      // dvFold passes logicalCdf=false: its rewrite changes no logical
-      // row, so it states "no change" with an EMPTY feed.
-      if (wantCdf) {
-        val logical = versionSchema(s, fromDir)
-        if (!logicalCdf)
-          stageEmptyChanges(s, staging.toString, logical, toVersion)
-        else {
-          val dvKeys =
-            if (fs.exists(new Path(s"$fromDir/_deletes")))
-              s.read.parquet(s"$fromDir/_deletes").select(col(key))
-            else deletes.select(col(key)).limit(0)
-          val uRows =
-            if (appliedCached == null)
-              s.createDataFrame(
-                s.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
-            else appliedCached
-              .select(logical.fieldNames.map(col).toIndexedSeq: _*)
-              .join(maybeBroadcast(updP.select(col(key)).distinct()),
-                Seq(key), "left_semi")
-              .join(maybeBroadcast(dvKeys), Seq(key), "left_anti")
-          stageChanges(s, staging.toString, logical,
-            uRows.withColumn("op", lit("U")).unionByName(
-              delKeys.withColumn("op", lit("D")),
-              allowMissingColumns = true),
-            toVersion)
-        }
-      }
-      // a MOR deletion vector on the source version still applies to the
-      // new one: deletes here remove their rows physically (every present
-      // change key lives in a rewritten file), and an UPDATE of a
-      // DV-deleted key is the SQL no-op — the ghost row gets modified but
-      // stays subtracted at read. dvFold is the one caller that DROPS the
-      // vector (carryDeletes=false), because its rewrite just applied it.
-      if (carryDeletes &&
-          fs.exists(new Path(s"$fromDir/_deletes")))
-        carrySidecar(s, fromDir, staging.toString, "_deletes")
-      carrySidecar(s, fromDir, staging.toString, "_schema")
-      // non-emptiness is already known from the manifest rows the commit
-      // just assembled — Σ n_rows over new + carried answers the gate
-      // with ZERO reads (the old head(1) resolved and opened data files)
-      val ok = publishStagedDir(s, root, toVersion,
-        manifestValidate(newRows, carriedL))
-      CowReport(ok, affected.length + untouched.length, affected.length,
-        affected, untouched)
-    } finally { // a refused staging must not leave the frames cached
-      if (appliedCached != null) appliedCached.unpersist(blocking = false)
-      updP.unpersist(blocking = false)
-      delKeys.unpersist(blocking = false)
-    }
+    val updCols = updates.columns.filterNot(_ == key).toSeq
+    val upd = updates.select(col(key) +:
+      updCols.map(c => col(c).as(s"__upd_$c")): _*)
+    val hits = spanHits(statsL.df(s), upd.select(col(key)), key)
+    val uRows =
+      if (hits.isEmpty) s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], logical)
+      else minusDv(s, fromDir, key,
+          readFiles(s, root, logical, statsL.partCol, hits))
+        .join(maybeBroadcast(upd), Seq(key))
+        .select(logical.fieldNames.toIndexedSeq.map(c =>
+          if (updCols.contains(c)) coalesce(col(s"__upd_$c"), col(c)).as(c)
+          else col(c)): _*)
+    cowApplyChanges(s, root, fromVersion, toVersion, key,
+      uRows.select(col("*"), lit("U").as("op"), lit(0L).as("version"))
+        .unionByName(nullFilled(logical, deletes.select(col(key)),
+          lit("D").as("op"), lit(1L).as("version"))))
   }
 
   /** The cow-family publish gate: staged version non-empty, answered
@@ -886,14 +808,16 @@ object Sync {
     }
 
   /** Y38b: CDC-INTO-LAKE — apply a full I/U/D change log to a
-    * published copy-on-write table. This is what [[cowApply]] cannot
-    * express: INSERTS. The change log is the y4 shape (full row + `op`
-    * ∈ {I,U,D} + `version`); the apply:
+    * published copy-on-write table: the ONE row-level writer. Every
+    * row-level verb commits here — [[cowApply]] (y38 DELETE/UPDATE),
+    * [[dvFold]], [[mergeInto]] (y45), SQL DML, JDBC capture, streaming
+    * — each as a front-end that builds the batch. The change log is
+    * the y4 shape (full row + `op` ∈ {I,U,D} + `version`); the apply:
     *
     *  1. collapses the log LATEST-WINS per key (window over version —
     *     a key updated then deleted ends deleted, the y4 idiom);
     *  2. prunes affected files with ALL change keys against the
-    *     `_file_stats` manifest, exactly as cowApply;
+    *     `_file_stats` manifest (a broadcast span join, collected);
     *  3. routes every surviving upsert by SPAN, not by existence:
     *     an upsert whose key falls inside an affected file's span
     *     joins that file's rewrite (update-in-place or insert-in-span —
@@ -905,7 +829,12 @@ object Sync {
     *  4. rewrites = affected rows minus ALL change keys, union the
     *     in-span upserts; stats recomputed over the changed subset
     *     only; untouched files carry byte-verbatim; one y36 swap
-    *     publishes the new version. */
+    *     publishes the new version.
+    *
+    * A deletion vector on the source version shapes the commit
+    * (MOR interplay): the carried vector drops every key the rewrite
+    * re-asserted or physically removed, and the feed drops every D the
+    * vector already hid — see the two rules inline. */
   private[graft] def cowApplyChanges(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String,
       changes: DataFrame): CowReport = {
@@ -913,7 +842,7 @@ object Sync {
     val fs = new Path(root)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val fromDir = s"$root/v$fromVersion"
-    // ONE manifest read; further uses are driver-local (see cowApply)
+    // ONE manifest read; every further use is driver-local
     val statsL = manifestLocal(s, root, s"v$fromVersion")
     require(statsL.rows.nonEmpty,
       s"cowApplyChanges: $fromDir has no manifest files")
@@ -942,10 +871,17 @@ object Sync {
     try {
       val upserts = latest.filter(col("op") =!= "D").drop("op", "version")
       val changeKeys = latest.select(ids.map(col): _*).distinct()
-      val affectedFD = changeKeys.join(broadcast(stats), owns)
-        .select("file", "dir").distinct()
-        .collect().map(r => (r.getString(0), r.getString(1)))
-        .sortBy(_._1).toSeq
+      // one collect prunes the manifest AND flags the append frontier:
+      // a batch row that no file owns is an upsert past every span (or
+      // a D of a key the version never held)
+      val hits = latest.select((ids :+ "op").map(col): _*)
+        .join(broadcast(stats), owns, "left")
+        .select(col("file"), col("dir"),
+          col("file").isNull && col("op") =!= "D")
+        .distinct().collect()
+      val affectedFD = hits.filterNot(_.isNullAt(0))
+        .map(r => (r.getString(0), r.getString(1))).sortBy(_._1).toSeq
+      val hasFrontier = hits.exists(_.getBoolean(2))
       val affected = affectedFD.map(_._1)
       val affectedSet = affected.toSet
       val untouched = statsL.files.sorted.diff(affected)
@@ -972,9 +908,12 @@ object Sync {
       // one range shuffle of the CHANGED SUBSET only (never the table):
       // affected-file rows, in-span upserts, and the append frontier land
       // back in contiguous key ranges, so every file in the new version
-      // keeps a narrow span and the next mutation prunes just as well
-      writer(rewritten
-          .repartitionByRange(math.max(affected.length, 1) + 1,
+      // keeps a narrow span and the next mutation prunes just as well.
+      // One output range per rewritten file, plus one for the frontier
+      // when there is one — a 1-key DELETE writes exactly 1 file
+      if (affected.isEmpty && !hasFrontier) fs.mkdirs(staging)
+      else writer(rewritten
+          .repartitionByRange(affected.length + (if (hasFrontier) 1 else 0),
             ids.map(col): _*)
           .sortWithinPartitions(ids.map(col): _*), partCol)
         .mode("overwrite").parquet(staging.toString)
@@ -983,23 +922,32 @@ object Sync {
       val carriedL = statsL.filterFiles(!affectedSet(_))
       val newRows = writeStagedManifest(s, root, toVersion, key,
         carriedL.df(s))
-      // MOR interplay: an UPSERT re-asserts its key's existence (CDC
-      // semantics — I/U means the row exists at the source NOW), so the
-      // carried deletion vector drops every upserted key; D keys need no
-      // DV entry — their physical rows were just removed (every present
-      // change key lives in a rewritten file)
-      if (fs.exists(new Path(s"$fromDir/_deletes"))) {
-        val oldDv = s.read.parquet(s"$fromDir/_deletes")
-        oldDv.join(maybeBroadcast(upserts.select(col(key)).distinct()),
-            Seq(key), "left_anti")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$staging/_deletes")
+      // MOR interplay, carried DV: an UPSERT re-asserts its key's
+      // existence (CDC semantics — I/U means the row exists at the
+      // source NOW), so the vector drops every upserted key. On a flat
+      // version it drops the D keys too: every file holding one was
+      // just rewritten without it. A partitioned D names (partition,
+      // key) while the vector is keyed on the key alone, so there it
+      // stays. An empty result writes no `_deletes` at all.
+      val dv = dvOf(s, fromDir, key)
+      dv.foreach { d =>
+        val settled =
+          if (partCol.isEmpty) latest else latest.filter(col("op") =!= "D")
+        val kept = d.join(maybeBroadcast(settled.select(col(key))
+          .distinct()), Seq(key), "left_anti")
+        if (kept.head(1).nonEmpty)
+          kept.coalesce(1).write.mode("overwrite")
+            .parquet(s"$staging/_deletes")
       }
       // Y55: the resolved (latest-wins) batch IS this commit's change
-      // feed — stage it with the version it creates
+      // feed, less the D rows whose key the source DV already hides —
+      // re-deleting a hidden key changes no logical row
       if (cdfEnabled(fs, root))
         stageChanges(s, staging.toString, evolved,
-          latest.drop("version"), toVersion)
+          dv.fold(latest)(d => latest.filter(col("op") =!= "D")
+            .unionByName(latest.filter(col("op") === "D")
+              .join(maybeBroadcast(d), Seq(key), "left_anti")))
+            .drop("version"), toVersion)
       carrySidecar(s, fromDir, staging.toString, "_schema")
       val ok = publishStagedDir(s, root, toVersion,
         manifestValidate(newRows, carriedL))
@@ -1130,24 +1078,22 @@ object Sync {
   }
 
   /** Y40: MERGE-ON-READ DELETION VECTORS — the scale complement to
-    * [[cowApply]]. Copy-on-write pays a file REWRITE per mutation
-    * batch; under high-frequency small deletes (GDPR trickle, CDC
-    * tombstone streams) that write-amplifies badly. Merge-on-read
-    * inverts the trade: a delete batch writes only a tiny `_deletes`
-    * key sidecar inside the new version dir (underscore prefix =
-    * invisible to plain parquet readers) and carries EVERY data file
-    * and the `_file_stats` manifest verbatim — zero data-file bytes
-    * rewritten, publish latency is O(|delete batch|), not O(touched
-    * files). The read path ([[readPublishedMor]]) subtracts the
-    * sidecar with one BROADCAST anti-join — the DV is delta-sized by
-    * construction, so the table never shuffles and the scan stays
-    * whole-stage-codegen'd. Sidecars ACCUMULATE across versions
-    * (v3's `_deletes` = v2's ∪ the new batch, deduped), so a reader
-    * always consults exactly one DV file; when the vector grows past
-    * taste, [[dvFold]] folds it into the base exactly once via the
-    * cow path and the next version starts with a clean slate. The
-    * local-FS verbatim carry stands in for the object-store manifest
-    * entry / server-side copy, as in cowApply (step 3 there). */
+    * copy-on-write ([[cowApplyChanges]]). Copy-on-write pays a file
+    * REWRITE per mutation batch; under high-frequency small deletes
+    * (GDPR trickle, CDC tombstone streams) that write-amplifies badly.
+    * Merge-on-read inverts the trade: a delete batch writes only a tiny
+    * `_deletes` key sidecar inside the new version dir (underscore
+    * prefix = invisible to plain parquet readers) and carries EVERY
+    * data file by manifest reference — zero data-file bytes rewritten,
+    * publish latency is O(|delete batch|), not O(touched files). The
+    * read path ([[readPublishedMor]]) subtracts the sidecar with one
+    * BROADCAST anti-join — the DV is delta-sized by construction, so
+    * the table never shuffles and the scan stays whole-stage-codegen'd.
+    * Sidecars ACCUMULATE across versions (v3's `_deletes` = v2's ∪ the
+    * new batch, deduped), so a reader always consults exactly one DV
+    * file; when the vector grows past taste, [[dvFold]] folds it into
+    * the base exactly once through the cow writer and the next version
+    * starts with a clean slate. */
   private[graft] def dvDelete(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String,
       deletes: DataFrame): CowReport = {
@@ -1194,13 +1140,8 @@ object Sync {
     * ghost rows — the DV is part of the version's logical content. */
   private[graft] def readPublishedMor(s: SparkSession, root: String,
       key: String): (String, DataFrame) = {
-    import org.apache.hadoop.fs.Path
     val (v, base) = readPublished(s, root)
-    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(s"$root/$v/_deletes"))) (v, base)
-    else (v, base.join(
-      broadcast(s.read.parquet(s"$root/$v/_deletes")), Seq(key),
-      "left_anti"))
+    (v, minusDv(s, s"$root/$v", key, base))
   }
 
   /** A version dir's LOGICAL content: its files MINUS its deletion
@@ -1211,29 +1152,27 @@ object Sync {
     * DV-carrying version resurrects logically-deleted ghosts. The DV
     * is delete-sized → broadcast anti-join, no shuffle. */
   private[graft] def readVersionLogical(s: SparkSession, dir: String,
-      key: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val base = readVersionDir(s, dir)
-    val p = new Path(s"$dir/_deletes")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) base
-    else base.join(broadcast(s.read.parquet(p.toString)
-      .select(col(key))), Seq(key), "left_anti")
-  }
+      key: String): DataFrame =
+    minusDv(s, dir, key, readVersionDir(s, dir))
 
-  /** Fold the accumulated deletion vector into the base files — one
-    * cow rewrite ([[cowApply]] prunes to the files whose key spans
-    * contain DV keys; everything else carries verbatim) whose staged
-    * output simply omits `_deletes`, so the published version is clean
-    * and the next MOR read is sidecar-free. Run it on the compaction
-    * cadence (y39), not per delete — that scheduling split is the
-    * entire point of merge-on-read. */
+  /** Fold the accumulated deletion vector into the base files: a D
+    * batch of exactly the vector's keys through [[cowApplyChanges]].
+    * It prunes to the files whose key spans hold DV keys and rewrites
+    * them without the ghosts, everything else carries verbatim; the
+    * writer's DV rule then leaves no `_deletes` (every key was
+    * physically removed) and its feed rule leaves an empty feed (every
+    * D was already hidden), so the published version is clean and the
+    * next MOR read is sidecar-free. Flat versions only: the vector is
+    * keyed on the key alone. Run it on the compaction cadence (y39),
+    * not per delete — that scheduling split is the entire point of
+    * merge-on-read. */
   private[graft] def dvFold(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String): CowReport = {
-    val dv = s.read.parquet(s"$root/v$fromVersion/_deletes")
-    cowApply(s, root, fromVersion, toVersion, key,
-      deletes = dv, updates = dv.limit(0), carryDeletes = false,
-      logicalCdf = false) // folding already-deleted ghosts changes no row
+    val fromDir = s"$root/v$fromVersion"
+    cowApplyChanges(s, root, fromVersion, toVersion, key,
+      nullFilled(versionSchema(s, fromDir),
+        s.read.parquet(s"$fromDir/_deletes").select(col(key)),
+        lit("D").as("op"), lit(0L).as("version")))
   }
 
   private[graft] final case class MergeReport(published: Boolean,
@@ -1242,9 +1181,9 @@ object Sync {
       nInserted: Long, nNmbsDeleted: Long)
 
   /** Y45: DECLARATIVE MERGE INTO on the published lake — the full SQL
-    * clause matrix over the cow machinery. [[cowApplyChanges]] applies a
-    * CDC log whose ops are already decided; MERGE decides them from the
-    * MATCH relationship and per-clause conditions:
+    * clause matrix as a front-end of [[cowApplyChanges]]. That writer
+    * applies a CDC log whose ops are already decided; MERGE decides
+    * them from the MATCH relationship and per-clause conditions:
     *
     *   WHEN MATCHED AND <delCond>      THEN DELETE        (wins first)
     *   WHEN MATCHED [AND <updCond>]    THEN UPDATE SET *  (source wins)
@@ -1256,21 +1195,25 @@ object Sync {
     *    target row an ERROR, not a nondeterministic pick — checked with
     *    one delta-sized groupBy BEFORE anything is staged; a violation
     *    refuses loudly with no reader-visible change.
-    *  - Pruning: affected files = spans hit by SOURCE KEYS ∪ the
-    *    not-matched-by-source key range. NMBS without a range predicate
-    *    would force a FULL table rewrite (every file could hold an
-    *    unmatched row) — so the range is REQUIRED here, the Delta-lake
-    *    deployment discipline made structural.
-    *  - The match itself: affected files full-outer-join the broadcast
-    *    source (delta-sized by definition); matched rows route by the
-    *    clause conditions, target-only rows face the NMBS clause,
-    *    source-only rows are the IN-SPAN inserts. Source keys outside
-    *    every file span never join anything — they are the append
-    *    FRONTIER, inserted from the source alone (y38b's routing).
-    *  - Rewrite = surviving rows range-repartitioned back into narrow
-    *    key spans; untouched files carry byte-verbatim; one y36 swap.
-    *  - MOR interplay: source keys re-assert existence (the y38b rule),
-    *    so a carried deletion vector drops every source key.
+    *  - Classification reads only the files whose spans SOURCE KEYS or
+    *    the not-matched-by-source key range hit. NMBS without a range
+    *    predicate would have to read the whole table (every file could
+    *    hold an unmatched row) — so the range is REQUIRED here, the
+    *    Delta-lake deployment discipline made structural.
+    *  - The match itself: those files full-outer-join the source
+    *    (delta-sized by definition); matched rows route by the clause
+    *    conditions, target-only rows face the NMBS clause, source-only
+    *    rows are the IN-SPAN inserts. Source keys outside every file
+    *    span never join anything — they are the append FRONTIER,
+    *    inserted from the source alone (y38b's routing).
+    *  - The clauses that FIRED become the batch: U post-images, I rows
+    *    (in span and frontier), D keys (matched and NMBS), one version
+    *    stamp (the gate made keys unique). [[cowApplyChanges]] rewrites
+    *    only the files those keys touch and commits.
+    *  - MOR interplay: MATCHED is a relationship with the LOGICAL
+    *    content, so a DV'd ghost is NOT MATCHED; only a firing INSERT
+    *    re-asserts it, and the writer drops exactly the re-asserted keys
+    *    from the carried vector.
     *
     * Conditions are Columns over the joined namespace: target columns
     * under their own names, source columns as `src_<c>` (the key keeps
@@ -1283,19 +1226,14 @@ object Sync {
       notMatchedInsertCond: Option[org.apache.spark.sql.Column],
       nmbsDelete: Option[(Long, Long, org.apache.spark.sql.Column)])
       : MergeReport = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
     val fromDir = s"$root/v$fromVersion"
-    // ONE manifest read; further uses are driver-local (see cowApply)
     val statsL = manifestLocal(s, root, s"v$fromVersion")
     val stats = statsL.df(s)
-    val nTotal = statsL.rows.length
     // SQL-standard cardinality gate: one source row per key, or refuse
     val dup = source.groupBy(key).count().filter(col("count") > 1)
       .head(1).nonEmpty
     if (dup) return MergeReport(published = false, cardinalityOk = false,
-      nTotal, 0, 0L, 0L, 0L, 0L)
+      statsL.rows.length, 0, 0L, 0L, 0L, 0L)
     val evolved = versionSchema(s, fromDir)
     val cols = evolved.fieldNames.toSeq
     val srcCols = source.columns.filterNot(_ == key).toSeq
@@ -1304,42 +1242,21 @@ object Sync {
       "mergeInto: INSERT * needs the source to carry every target column")
     val srcP = source.select(col(key) +:
       srcCols.map(c => col(c).as(s"src_$c")): _*)
-    val srcKeys = source.select(col(key)).distinct()
-    // MOR awareness: MATCHED is a relationship with the version's
-    // LOGICAL content = files minus the deletion vector (the
-    // lakeChangesImages/cowApplyChanges rule). Without the subtraction
-    // a DV'd ghost row whose key reappears in the source would route
-    // WHEN MATCHED — surviving the rewrite with stale pre-delete values.
-    val dvPath = new Path(s"$fromDir/_deletes")
-    val fromDv: Option[DataFrame] =
-      if (fs.exists(dvPath))
-        Some(s.read.parquet(dvPath.toString).select(col(key)))
-      else None
-    val bySrc = srcKeys.join(broadcast(stats),
-        col(key) >= col("kmin") && col(key) <= col("kmax"))
-      .select("file", "dir").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
     val byNmbs = nmbsDelete.map { case (lo, hi, _) =>
       stats.filter(col("kmax") >= lo && col("kmin") <= hi)
         .select("file", "dir").collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
     }.getOrElse(Set.empty[(String, String)])
-    val affectedFD = (bySrc ++ byNmbs).toSeq.sortBy(_._1)
-    val affected = affectedFD.map(_._1)
-    val affectedSet = affected.toSet
-    val untouched = statsL.files.sorted.diff(affected)
+    val classifiedFD = (spanHits(stats, source.select(col(key)), key)
+      .toSet ++ byNmbs).toSeq.sortBy(_._1)
     // The joined namespace all four clause conditions see. FULL OUTER
     // cannot broadcast (both sides produce unmatched rows), so this is
     // the one shuffle — of the PRUNED file subset + the delta-sized
     // source, never the table.
-    val affectedBase =
-      (if (affected.isEmpty)
-         s.createDataFrame(
-             s.sparkContext.emptyRDD[org.apache.spark.sql.Row], evolved)
-       else
-         s.read.schema(evolved)
-           .parquet(affectedFD.map { case (f, d) =>
-             s"$root/$d/$f" }: _*))
+    val classifiedBase =
+      if (classifiedFD.isEmpty) s.createDataFrame(
+        s.sparkContext.emptyRDD[org.apache.spark.sql.Row], evolved)
+      else readFiles(s, root, evolved, None, classifiedFD)
     // ghost rows (physically present, DV-subtracted) leave the match:
     // their keys are NOT MATCHED, so a re-asserting source row INSERTS
     //
@@ -1350,8 +1267,7 @@ object Sync {
     // land TWICE (caught by the y45 oracle at sf0.01)
     val srcInSpan = srcP.join(broadcast(stats),
       col(key) >= col("kmin") && col(key) <= col("kmax"), "left_semi")
-    val joined = fromDv.fold(affectedBase)(dv =>
-        affectedBase.join(broadcast(dv), Seq(key), "left_anti"))
+    val joined = minusDv(s, fromDir, key, classifiedBase)
       .withColumn("__t", lit(1))
       .join(srcInSpan.withColumn("__s", lit(1)), Seq(key), "full_outer")
     val matched = col("__t").isNotNull && col("__s").isNotNull
@@ -1359,8 +1275,8 @@ object Sync {
     val sOnly = col("__t").isNull && col("__s").isNotNull
     // SQL MERGE semantics: a clause condition evaluating to NULL (a
     // null column inside the predicate) means the clause DOES NOT FIRE
-    // — coalesce to false at the routing points so the survivor filter
-    // and the clause counters below read the same tri-state the same way
+    // — coalesce to false at the routing points so the batch and the
+    // clause counters below read the same tri-state the same way
     def fires(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
     val delM = matched && fires(matchedDeleteCond.getOrElse(lit(false)))
     val updM = matched && !delM &&
@@ -1378,69 +1294,25 @@ object Sync {
     val cnt = joined.agg(n(updM), n(delM), n(sOnly && insC), n(nmbsDel))
       .collect()(0)
     val nIns = cnt.getLong(2) + frontier.count()
-    // route: drop matched-deletes, NMBS-deletes, and non-inserting
-    // source-only rows; everything else becomes the rewrite
+    // the fired clauses as the writer's batch: U/I rows take the
+    // source's values for the columns it carries
     val outCols = cols.map { c =>
       if (c == key) col(key).as(c)
       else if (srcCols.contains(c))
         when(sOnly || updM, col(s"src_$c")).otherwise(col(c)).as(c)
       else col(c).as(c)
     }
-    val rewritten = joined
-      .filter(!delM && !nmbsDel && !(sOnly && !insC))
-      .select(outCols: _*)
+    val batch = joined.filter(updM || (sOnly && insC))
+      .select(outCols :+ when(updM, lit("U")).otherwise(lit("I")).as("op"): _*)
       .unionByName(frontier.select(
-        (col(key) +: srcCols.map(c => col(s"src_$c").as(c)))
-          .toIndexedSeq: _*)
-        .select(cols.map(col).toIndexedSeq: _*))
-    val staging = new Path(s"$root/_staging_v$toVersion")
-    fs.delete(staging, true)
-    rewritten
-      .repartitionByRange(math.max(affected.length, 1) + 1, col(key))
-      .sortWithinPartitions(key)
-      .write.mode("overwrite").parquet(staging.toString)
-    // zero-copy carry: untouched files ride as manifest references
-    // (filtered by the churn-sized affected set, driver-local)
-    val carriedL = statsL.filterFiles(!affectedSet(_))
-    val newRows = writeStagedManifest(s, root, toVersion, key,
-      carriedL.df(s))
-    // the carried DV drops ONLY keys this merge physically re-asserted
-    // (the inserted rows — a DV'd key can only be NOT MATCHED, so the
-    // insert path is the one that can put a physical row back). A
-    // source key whose insert condition did NOT fire keeps its DV
-    // entry — the merge never re-asserted it, dropping it would
-    // resurrect any ghost bytes still sitting in a CARRIED file.
-    fromDv.foreach { dv =>
-      val asserted = joined.filter(sOnly && insC).select(col(key))
-        .unionByName(frontier.select(col(key))).distinct()
-      dv.join(broadcast(asserted), Seq(key), "left_anti")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$staging/_deletes")
-    }
-    // Y55 feed: the clause routing IS the change classification —
-    // fired updates as U (post-image), fired matched/NMBS deletes as D
-    // (key only), fired inserts (in-span + frontier) as I
-    if (cdfEnabled(fs, root)) {
-      val uRows = joined.filter(updM).select(outCols: _*)
-        .withColumn("op", lit("U"))
-      val iRows = joined.filter(sOnly && insC).select(outCols: _*)
-        .unionByName(frontier.select(
-          (col(key) +: srcCols.map(c => col(s"src_$c").as(c)))
-            .toIndexedSeq: _*)
-          .select(cols.map(col).toIndexedSeq: _*))
-        .withColumn("op", lit("I"))
-      val dRows = joined.filter(delM || nmbsDel).select(col(key))
-        .withColumn("op", lit("D"))
-      stageChanges(s, staging.toString, evolved,
-        uRows.unionByName(iRows)
-          .unionByName(dRows, allowMissingColumns = true),
-        toVersion)
-    }
-    carrySidecar(s, fromDir, staging.toString, "_schema")
-    val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newRows, carriedL))
-    MergeReport(ok, cardinalityOk = true,
-      nTotal, affected.length,
+        (col(key) +: srcCols.map(c => col(s"src_$c").as(c))).toIndexedSeq: _*)
+        .select(cols.map(col) :+ lit("I").as("op"): _*))
+      .unionByName(nullFilled(evolved,
+        joined.filter(delM || nmbsDel).select(col(key)), lit("D").as("op")))
+      .withColumn("version", lit(0L))
+    val rep = cowApplyChanges(s, root, fromVersion, toVersion, key, batch)
+    MergeReport(rep.published, cardinalityOk = true,
+      rep.nFilesTotal, rep.nFilesRewritten,
       cnt.getLong(0), cnt.getLong(1), nIns, cnt.getLong(3))
   }
 
@@ -2061,8 +1933,8 @@ object Sync {
     *  - DV RE-ASSERTION: appending a key the carried deletion vector
     *    holds must RESURRECT it (INSERT has no "matched" state — the
     *    new row is asserted content), so carried DV = old DV minus
-    *    the increment's keys, mirroring mergeInto's only-reasserted
-    *    rule. Without this an insert into a MOR table silently loses
+    *    the increment's keys, mirroring [[cowApplyChanges]]'
+    *    re-assertion rule. Without this an insert into a MOR table silently loses
     *    exactly the rows it claims to add. */
   private[graft] def appendPublish(s: SparkSession, root: String,
       key: String, df: DataFrame, overwrite: Boolean,
@@ -2112,7 +1984,7 @@ object Sync {
         .cache()
       val collide = colliding.head(1).nonEmpty
       val statsPath = new Path(s"$fromDir/_file_stats")
-      // ONE manifest read; further uses driver-local (see cowApply)
+      // ONE manifest read; further uses driver-local
       val oldStats =
         if (fs.exists(statsPath))
           Some(manifestLocal(s, root, s"v$cur"))
@@ -2131,10 +2003,7 @@ object Sync {
       val affectedFD: Seq[(String, String)] =
         if (!collide) Nil
         else oldStats match {
-          case Some(st) => st.df(s).join(colliding,
-              col(key) >= col("kmin") && col(key) <= col("kmax"))
-            .select("file", "dir").distinct().collect()
-            .map(r => (r.getString(0), r.getString(1))).toSeq
+          case Some(st) => spanHits(st.df(s), colliding, key)
           case None => oldFD // no manifest — rewrite conservatively
         }
       val affected = affectedFD.map(_._1)

@@ -116,10 +116,9 @@ private[lake] object LakeProcedures {
               rep.trimmedPtrGens.size))
         case "dv_fold" =>
           val v = liveV
-          // the fold rewrites through the flat-only cowApply and a
-          // deletion vector is keyed on the key alone, while a
-          // partitioned row's identity is (partition, key): refuse
-          // rather than flatten the <col>=<v>/ layout
+          // a deletion vector is keyed on the key alone, while a
+          // partitioned row's identity is (partition, key): the fold's
+          // D batch could not name the partition of the rows it removes
           if (Sync.partColOf(spark, tableRoot, s"v$v").nonEmpty)
             throw new UnsupportedOperationException(
               "graftlake: procedure dv_fold on a PARTITIONED version is " +

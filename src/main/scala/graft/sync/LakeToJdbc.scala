@@ -589,7 +589,8 @@ object LakeToJdbc {
         reconcileTargetSchema(s, live.schema, m.key, m.cfg, jdbcName,
           dialect)
       }
-      // one churn-sized feed per changed member, reused by both phases
+      // one churn-sized feed per changed member, reused by both phases;
+      // every feed leaves the cache on the way out, failure or not
       val feeds0 = changed.map { case (m, w, liveV, _) =>
         val cdf = graft.ops.Sync.lakeChanges(s, s"$root/${m.table}",
           w.get, liveV, m.key)
@@ -597,61 +598,62 @@ object LakeToJdbc {
             (col("op") +: cdf.changes.columns.filterNot(_ == "op").toSeq
               .map(c => col(c).as(jdbcName(c)))): _*)
           .repartitionByRange(writers, col(jdbcName(m.key)))
-          .persist()
         (m, w.get, liveV, feed, cdf)
       }
-      // the member diffs are INDEPENDENT — materialize them (one
-      // op-count action each, caching the feed) concurrently so the
-      // next member's tasks back-fill the tail of the previous one's
-      // (guide §2.6); only the APPLY below is FK-ordered. Failures
-      // drain every future first, then rethrow — a staging error stays
-      // loud and no half-materialized feed is applied.
-      val opsList = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(3, math.max(feeds0.size, 1)))
-        try {
-          val fs2 = feeds0.map { case (_, _, _, feed, _) =>
-            pool.submit(new java.util.concurrent.Callable[Map[String, Long]] {
-              override def call(): Map[String, Long] =
-                feed.groupBy("op").count().collect()
-                  .map(r => r.getString(0) -> r.getLong(1)).toMap
-            })
-          }
-          val results = fs2.map(f =>
-            try Right(f.get())
-            catch { case e: java.util.concurrent.ExecutionException =>
-              Left(e.getCause) })
-          results.collectFirst { case Left(e) => e }.foreach(throw _)
-          results.collect { case Right(m) => m }
-        } finally pool.shutdown()
-      }
-      val feeds = feeds0.zip(opsList).map {
-        case ((m, w, liveV, feed, cdf), ops) =>
-          (m, w, liveV, feed, ops, cdf)
-      }
-      // upserts parent→child, then deletes child→parent
-      feeds.foreach { case (m, _, _, feed, _, _) =>
-        JdbcSync.applyChangeFeed(feed.filter(col("op") =!= "D"),
-          m.cfg, jdbcName(m.key), "op", dialect) }
-      feeds.reverse.foreach { case (m, _, _, feed, _, _) =>
-        JdbcSync.applyChangeFeed(feed.filter(col("op") === "D"),
-          m.cfg, jdbcName(m.key), "op", dialect) }
-      val applied = feeds.map { case (m, wv, liveV, feed, ops, cdf) =>
-        val live = graft.ops.Sync.readVersionLogical(s,
-          s"$root/${m.table}/v$liveV", m.key)
-        val (ok, vmode) = validateTarget(s, live, m.key, m.cfg, liveV,
-          validation, jdbcName, dialect,
-          lakeCount = graft.ops.Sync.manifestRowCount(s,
-            s"$root/${m.table}", liveV))
-        require(ok,
-          s"catchUpGroup: incremental ${m.table} $wv→$liveV left drift")
-        feed.unpersist(blocking = false)
-        m.table -> CatchUpReport("incremental", wv, liveV,
-          ops.getOrElse("I", 0L), ops.getOrElse("U", 0L),
-          ops.getOrElse("D", 0L),
-          cdf.scannedFrom + cdf.scannedTo,
-          cdf.totalFrom + cdf.totalTo, ok, validation = vmode)
-      }
+      val applied = try {
+        feeds0.foreach(_._4.persist())
+        // the member diffs are INDEPENDENT — materialize them (one
+        // op-count action each, caching the feed) concurrently so the
+        // next member's tasks back-fill the tail of the previous one's
+        // (guide §2.6); only the APPLY below is FK-ordered. Failures
+        // drain every future first, then rethrow — a staging error stays
+        // loud and no half-materialized feed is applied.
+        val opsList = {
+          val pool = java.util.concurrent.Executors.newFixedThreadPool(
+            math.min(3, math.max(feeds0.size, 1)))
+          try {
+            val fs2 = feeds0.map { case (_, _, _, feed, _) =>
+              pool.submit(new java.util.concurrent.Callable[Map[String, Long]] {
+                override def call(): Map[String, Long] =
+                  feed.groupBy("op").count().collect()
+                    .map(r => r.getString(0) -> r.getLong(1)).toMap
+              })
+            }
+            val results = fs2.map(f =>
+              try Right(f.get())
+              catch { case e: java.util.concurrent.ExecutionException =>
+                Left(e.getCause) })
+            results.collectFirst { case Left(e) => e }.foreach(throw _)
+            results.collect { case Right(m) => m }
+          } finally pool.shutdown()
+        }
+        val feeds = feeds0.zip(opsList).map {
+          case ((m, w, liveV, feed, cdf), ops) =>
+            (m, w, liveV, feed, ops, cdf)
+        }
+        // upserts parent→child, then deletes child→parent
+        feeds.foreach { case (m, _, _, feed, _, _) =>
+          JdbcSync.applyChangeFeed(feed.filter(col("op") =!= "D"),
+            m.cfg, jdbcName(m.key), "op", dialect) }
+        feeds.reverse.foreach { case (m, _, _, feed, _, _) =>
+          JdbcSync.applyChangeFeed(feed.filter(col("op") === "D"),
+            m.cfg, jdbcName(m.key), "op", dialect) }
+        feeds.map { case (m, wv, liveV, _, ops, cdf) =>
+          val live = graft.ops.Sync.readVersionLogical(s,
+            s"$root/${m.table}/v$liveV", m.key)
+          val (ok, vmode) = validateTarget(s, live, m.key, m.cfg, liveV,
+            validation, jdbcName, dialect,
+            lakeCount = graft.ops.Sync.manifestRowCount(s,
+              s"$root/${m.table}", liveV))
+          require(ok,
+            s"catchUpGroup: incremental ${m.table} $wv→$liveV left drift")
+          m.table -> CatchUpReport("incremental", wv, liveV,
+            ops.getOrElse("I", 0L), ops.getOrElse("U", 0L),
+            ops.getOrElse("D", 0L),
+            cdf.scannedFrom + cdf.scannedTo,
+            cdf.totalFrom + cdf.totalTo, ok, validation = vmode)
+        }
+      } finally feeds0.foreach(_._4.unpersist(blocking = false))
       // watermarks advance only after EVERY member validated
       applied.foreach { case (t, rep) =>
         val m = members.find(_.table == t).get

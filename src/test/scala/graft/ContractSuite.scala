@@ -30,6 +30,15 @@ class ContractSuite extends AnyFunSuite with SparkFixture {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  test("Bench JSON numbers ignore the JVM's default locale") {
+    val was = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(Bench.num(1.5) == "1.500", "a German locale leaked into JSON")
+      assert(Bench.num(12.0, 1) == "12.0")
+    } finally java.util.Locale.setDefault(was)
+  }
+
   test("entry returns rows (the driver smoke gate)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -465,6 +465,45 @@ class JdbcSyncSuite extends AnyFunSuite with SparkFixture {
       s"expected an FK violation, got: $ex")
   }
 
+  test("group catch-up leak law: a drift refusal leaves no member feed cached") {
+    import graft.ops.Sync
+    import graft.sync.LakeToJdbc.{GroupMember, Validation}
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_grpleak")
+      .toString + "/grp"
+    def snap(name2: String) = Seq((1L, "a"), (2L, name2), (3L, "c"))
+      .toDF("k", "name")
+    assert(Sync.publishGroup(spark, root, Seq("p" -> snap("b")), 1,
+      _.head(1).nonEmpty))
+    Class.forName(cfg.driver)
+    def exec(sql: String): Unit = {
+      val c = java.sql.DriverManager.getConnection(cfg.url)
+      try c.createStatement().execute(sql) finally c.close()
+    }
+    exec("CREATE TABLE GRP_LEAK (K BIGINT NOT NULL PRIMARY KEY, " +
+      "NAME VARCHAR(32))")
+    val m = GroupMember("p", "k", cfg.copy(table = "GRP_LEAK"))
+    assert(graft.sync.LakeToJdbc.catchUpGroup(spark, root, Seq(m))
+      .forall(_._2.validated))
+    // v2's feed touches only k=2; the mirror loses k=3 behind the
+    // sync's back, so the full validation after the apply must refuse
+    assert(Sync.publishGroup(spark, root, Seq("p" -> snap("B")), 2,
+      _.head(1).nonEmpty))
+    exec("DELETE FROM GRP_LEAK WHERE K = 3")
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    val e = intercept[IllegalArgumentException] {
+      graft.sync.LakeToJdbc.catchUpGroup(spark, root, Seq(m),
+        validation = Validation.Full())
+    }
+    assert(e.getMessage.contains("left drift"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the refused catch-up left a member feed in the cache")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      "the refused catch-up left a persisted RDD behind")
+  }
+
   test("Y48b law: CDF-driven lake→SCD2 sync — history accretes, current slice converges, replay is a no-op, chain extends history") {
     import graft.ops.Sync
     val spark0 = spark

@@ -2580,6 +2580,86 @@ class OperatorSuite extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("one-MERGE law: Sync.mergeInto and SQL MERGE INTO publish the same rows and the same feed") {
+    val spark0 = spark
+    import spark0.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft_onemerge")
+      .toString
+    val (lib, sql) = (s"$base/lib", s"$base/viasql")
+    // even keys only, two files: odd source keys insert inside a span,
+    // 100 lands past every span
+    val v1 = (1L to 20L).map(i => (2 * i, i * 10.0, "A"))
+      .toDF("k", "price", "st").repartitionByRange(2, col("k"))
+    Seq(lib, sql).foreach { r =>
+      Sync.enableCdf(spark, r)
+      assert(Sync.publish(spark, v1, r, 1, _.head(1).nonEmpty))
+      Sync.writeFileStats(spark, s"$r/v1", "k")
+    }
+    // 4 and 30 delete (price > 1000), 6 and 12 update, 7 and 100 insert
+    val src = Seq((4L, 5000.0, "D"), (30L, 9000.0, "D"), (6L, 66.0, "U"),
+      (12L, 120.5, "U"), (7L, 7.0, "I"), (100L, 1.0, "I"))
+      .toDF("k", "price", "st")
+    val rep = Sync.mergeInto(spark, lib, 1, 2, "k", src,
+      matchedDeleteCond = Some(col("src_price") > 1000.0),
+      matchedUpdateCond = None, notMatchedInsertCond = None,
+      nmbsDelete = None)
+    assert(rep.published && rep.nMatchedDeleted == 2 &&
+      rep.nMatchedUpdated == 2 && rep.nInserted == 2, s"$rep")
+    spark.conf.set("spark.sql.catalog.gmerge",
+      "graft.sources.lake.LakeCatalog")
+    spark.conf.set("spark.sql.catalog.gmerge.root", base)
+    spark.conf.set("spark.sql.catalog.gmerge.key.viasql", "k")
+    src.createOrReplaceTempView("one_merge_src")
+    spark.sql(
+      """MERGE INTO gmerge.viasql t USING one_merge_src s ON t.k = s.k
+        |WHEN MATCHED AND s.price > 1000 THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET *
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    def rows(r: String): Set[(Long, Double, String)] = {
+      val (v, df) = Sync.readPublishedMor(spark, r, "k")
+      assert(v == "v2", s"$r is at $v")
+      df.collect().map(x => (x.getAs[Long]("k"), x.getAs[Double]("price"),
+        x.getAs[String]("st"))).toSet
+    }
+    val expected = v1.collect().map(x => (x.getLong(0), x.getDouble(1),
+      x.getString(2))).toSet.filterNot(t => Set(4L, 6L, 12L, 30L)(t._1)) ++
+      Set((6L, 66.0, "U"), (12L, 120.5, "U"), (7L, 7.0, "I"),
+        (100L, 1.0, "I"))
+    assert(rows(lib) == expected && rows(sql) == expected)
+    def feed(r: String): Seq[(String, Long)] =
+      spark.read.parquet(s"$r/v2/_changes").select("op", "k").collect()
+        .map(x => (x.getString(0), x.getLong(1))).toSeq.sorted
+    assert(feed(lib) == feed(sql) && feed(lib) == Seq(("D", 4L),
+      ("D", 30L), ("I", 7L), ("I", 100L), ("U", 6L), ("U", 12L)),
+      s"library feed ${feed(lib)} vs SQL feed ${feed(sql)}")
+  }
+
+  test("feed/DV law: re-deleting a DV'd key leaves the feed, the vector and the diff without it") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_feeddv")
+      .toString + "/t"
+    Sync.enableCdf(spark, root)
+    assert(Sync.publish(spark, (1L to 12L).map(k => (k, k * 1.5))
+      .toDF("k", "x").repartitionByRange(3, col("k")), root, 1,
+      _.head(1).nonEmpty))
+    Sync.writeFileStats(spark, s"$root/v1", "k")
+    assert(Sync.dvDelete(spark, root, 1, 2, "k", Seq(5L, 9L).toDF("k"))
+      .published)
+    val rep = Sync.cowApplyChanges(spark, root, 2, 3, "k",
+      Seq((5L, Option.empty[Double], "D", 1L))
+        .toDF("k", "x", "op", "version"))
+    assert(rep.published && rep.nFilesRewritten == 1, s"$rep")
+    assert(spark.read.parquet(s"$root/v3/_changes")
+      .filter(col("k") === 5L).isEmpty,
+      "the feed re-deletes a key the deletion vector already hid")
+    assert(spark.read.parquet(s"$root/v3/_deletes").collect()
+      .map(_.getLong(0)).toSet == Set(9L),
+      "the carried vector must drop the physically removed key only")
+    assert(Sync.lakeChanges(spark, root, 2, 3, "k").changes.isEmpty,
+      "re-deleting a hidden key changed the logical content")
+  }
+
   test("R11 CDC publish-refusal law: a refused lake publish FAILS the batch instead of committing the checkpoint past lost changes") {
     val spark0 = spark
     import spark0.implicits._
