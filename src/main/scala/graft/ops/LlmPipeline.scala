@@ -56,8 +56,9 @@ object LlmPipeline {
     Array.fill(NPlanes, Dim)(next())
   }
   private def planeLit(p: Array[Double]): Column = array(p.map(lit(_)).toSeq: _*)
-  private def planeSql(p: Array[Double]): String =
-    p.map(v => f"$v%.6f").mkString("[", ", ", "]::DOUBLE[]")
+  private[graft] def planeSql(p: Array[Double]): String =
+    p.map(v => String.format(java.util.Locale.ROOT, "%.6f", Double.box(v)))
+      .mkString("[", ", ", "]::DOUBLE[]")
 
   /** Universal-hash MinHash lane constants (l2b): p = 2³¹−1 (prime);
     * (aᵢ, bᵢ) from the same seeded LCG as `planes`, embedded as literals

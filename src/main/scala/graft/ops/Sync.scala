@@ -4376,16 +4376,13 @@ object Sync {
       // (key, valid_from)) — Spark's JDBC writer can't declare one, so
       // plain DDL here, then bulk-append the v1 snapshot as history
       // generation 1 (open rows: valid_from = 1, valid_to = NULL)
-      Class.forName(cfg.driver)
-      val conn = java.sql.DriverManager.getConnection(cfg.url)
       // bare table for the bulk history seed — the composite PK the
       // close/open probes need lands ONCE afterwards (load-then-index:
       // no per-row index maintenance during the 1-generation append)
-      try conn.createStatement().execute(
+      graft.sources.JdbcSync.withConn(cfg)(_.createStatement().execute(
         s"CREATE TABLE ${cfg.table} (O_ORDERKEY BIGINT NOT NULL, " +
           "O_TOTALPRICE DOUBLE, VALID_FROM BIGINT NOT NULL, " +
-          "VALID_TO BIGINT, IS_CURRENT SMALLINT)")
-      finally conn.close()
+          "VALID_TO BIGINT, IS_CURRENT SMALLINT)"))
       val seedRows = v1.count()
       graft.sources.JdbcSync.writeTable(
         v1.select(col("o_orderkey").as("O_ORDERKEY"),
@@ -4395,11 +4392,9 @@ object Sync {
           lit(1).cast("smallint").as("IS_CURRENT"))
           .repartitionByRange(1, col("O_ORDERKEY")),
         cfg, org.apache.spark.sql.SaveMode.Append)
-      val c2 = java.sql.DriverManager.getConnection(cfg.url)
-      try c2.createStatement().execute(
+      graft.sources.JdbcSync.withConn(cfg)(_.createStatement().execute(
         s"ALTER TABLE ${cfg.table} ADD CONSTRAINT " +
-          s"PK_${cfg.table} PRIMARY KEY (O_ORDERKEY, VALID_FROM)")
-      finally c2.close()
+          s"PK_${cfg.table} PRIMARY KEY (O_ORDERKEY, VALID_FROM)"))
       def histCounts(): (Long, Long) = {
         val r = graft.sources.JdbcSync.readTable(s, cfg, None)
           .agg(count(lit(1)), count(when(col("IS_CURRENT") === 0, 1)))
@@ -4621,12 +4616,11 @@ object Sync {
       require(publishGroup(s, root,
         Seq("nation" -> nat.unionByName(ghostNat), "customer" -> cust1),
         1, _.head(1).nonEmpty), "y52: v1 group publish refused")
-      val url = Sources.sharedDerbyUrl
       val natTbl = s"Y52_NATION_$n"; val custTbl = s"Y52_CUSTOMER_$n"
-      val drv = "org.apache.derby.jdbc.EmbeddedDriver"
-      Class.forName(drv)
-      val conn = java.sql.DriverManager.getConnection(url)
-      try {
+      val natCfg = graft.sources.JdbcSync.JdbcConfig(
+        url = Sources.sharedDerbyUrl, table = natTbl,
+        driver = "org.apache.derby.jdbc.EmbeddedDriver")
+      graft.sources.JdbcSync.withConn(natCfg) { conn =>
         val st = conn.createStatement()
         st.execute(s"CREATE TABLE $natTbl (N_NATIONKEY INTEGER " +
           "NOT NULL PRIMARY KEY, N_NAME VARCHAR(64))")
@@ -4634,14 +4628,11 @@ object Sync {
           "NOT NULL PRIMARY KEY, C_NATIONKEY INTEGER NOT NULL " +
           s"REFERENCES $natTbl (N_NATIONKEY), C_ACCTBAL DOUBLE, " +
           "C_MKTSEGMENT VARCHAR(32))")
-      } finally conn.close()
+      }
       val members = Seq(
-        graft.sync.LakeToJdbc.GroupMember("nation", "n_nationkey",
-          graft.sources.JdbcSync.JdbcConfig(url = url,
-            table = natTbl, driver = drv)),
+        graft.sync.LakeToJdbc.GroupMember("nation", "n_nationkey", natCfg),
         graft.sync.LakeToJdbc.GroupMember("customer", "c_custkey",
-          graft.sources.JdbcSync.JdbcConfig(url = url,
-            table = custTbl, driver = drv)))
+          natCfg.copy(table = custTbl)))
       val t1 = graft.sync.LakeToJdbc.catchUpGroup(s, root, members)
       require(publishGroup(s, root,
         Seq("nation" -> nat, "customer" -> cust), 2,

@@ -1,16 +1,22 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.sync.MergeSql
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 
 /** JDBC source/sink for table synchronization (SURVEY.md §2.1 S4/S5 — the
   * reference's named approach: "JDBC read/write for table synchronization",
-  * BASELINE.md). No database exists in this environment (zero egress), so
-  * these builders are exercised only for option-plumbing in JdbcSyncSuite;
-  * on a cluster they produce Spark's standard parallel JDBC scans/writes.
+  * BASELINE.md). Scans and plain writes are Spark's standard parallel JDBC
+  * reads/writes; the keyed writers ([[idempotentAppend]],
+  * [[applyChangeFeed]], [[applyScd2Feed]]) and the streaming JDBC sinks
+  * all run through ONE executor-side apply kernel, and every connection
+  * the library opens itself goes through [[withConn]]. The laws run end
+  * to end against embedded Derby (JdbcSyncSuite, StreamingSuite); the
+  * T-SQL renderings for the MS-SQL-shaped target are pinned offline in
+  * SyncJobSuite.
   *
   * Scale notes: reads MUST be range-partitioned (partitionColumn/bounds/
   * numPartitions) or the whole table funnels through one task; writes batch
-  * inserts per partition (`batchsize`), and MS-SQL type mapping is Spark's
+  * statements per partition (`batchsize`), and MS-SQL type mapping is Spark's
   * built-in MsSqlServerDialect (SURVEY §7.4 — no custom dialect needed).
   */
 object JdbcSync {
@@ -88,20 +94,27 @@ object JdbcSync {
       cols.forall(_.matches(ident)),
       s"ensureKeyIndex: invalid identifier in ${cfg.table} / $cols")
     val name = s"IX_${cfg.table.replace('.', '_')}_${cols.mkString("_")}"
+    withConn(cfg) { conn =>
+      try conn.createStatement().execute(
+        s"CREATE INDEX $name ON ${cfg.table} (${cols.mkString(", ")})")
+      catch {
+        case e: java.sql.SQLException
+            if e.getSQLState == "X0Y32" ||
+              Option(e.getMessage).exists(_.contains("already exists")) =>
+          () // idempotent re-run or externally managed index
+      }
+    }
+  }
+
+  /** Open one connection to `cfg`, run `f`, close it — the only place
+    * the library asks `DriverManager` for a connection. */
+  def withConn[A](cfg: JdbcConfig)(f: java.sql.Connection => A): A = {
     Class.forName(cfg.driver)
     val conn =
       if (cfg.user.isEmpty) java.sql.DriverManager.getConnection(cfg.url)
       else java.sql.DriverManager.getConnection(cfg.url, cfg.user,
         cfg.password)
-    try {
-      conn.createStatement().execute(
-        s"CREATE INDEX $name ON ${cfg.table} (${cols.mkString(", ")})")
-    } catch {
-      case e: java.sql.SQLException
-          if e.getSQLState == "X0Y32" ||
-            Option(e.getMessage).exists(_.contains("already exists")) =>
-        () // idempotent re-run or externally managed index
-    } finally conn.close()
+    try f(conn) finally conn.close()
   }
 
   /** Retry-idempotent keyed append: each partition MERGEs its rows into
@@ -121,30 +134,56 @@ object JdbcSync {
     * MERGEs. Cost vs plain INSERT is the per-row match probe — the
     * price of exactly-once on a non-transactional sink. */
   def idempotentAppend(df: DataFrame, cfg: JdbcConfig, key: String,
-      dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby,
+      dialect: MergeSql.Dialect = MergeSql.Derby,
       batchSize: Int = 1000): Unit = {
+    val valueCols = df.schema.fieldNames.filterNot(_ == key).toSeq
+    applyPartitions(df, cfg,
+      Seq(MergeSql.upsert(dialect, cfg.table, key, valueCols)),
+      _ => Seq(0), batchSize)
+  }
+
+  /** The one executor-side write loop behind every keyed JDBC writer.
+    * Each non-empty partition opens one connection ([[withConn]]) with
+    * autocommit off, prepares `stmts`, and binds each row ([[bindRow]])
+    * into the statements `route` names (indices into `stmts`). Flush
+    * rule: once any statement holds `batchSize` rows, every statement
+    * with pending rows executes, in declared order — so a statement
+    * declared earlier (SCD2's close) always lands before a later one
+    * (its open) for the same rows. The partition commits once at the
+    * end. Any failure rolls the partition back before the connection
+    * closes: closing with a transaction open is driver-defined (Derby
+    * refuses with 25001, which would mask the real error and leave the
+    * first batches' locks held; other drivers commit the partial work a
+    * retry assumes was never applied). */
+  private def applyPartitions(df: DataFrame, cfg: JdbcConfig,
+      stmts: Seq[MergeSql.Stmt], route: Row => Seq[Int],
+      batchSize: Int): Unit = {
     val schema = df.schema
-    val valueCols = schema.fieldNames.filterNot(_ == key).toSeq
-    val stmt = graft.sync.MergeSql.upsert(dialect, cfg.table, key, valueCols)
-    val (url, driver, user, password) = (cfg.url, cfg.driver, cfg.user, cfg.password)
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        Class.forName(driver)
-        val conn =
-          if (user.isEmpty) java.sql.DriverManager.getConnection(url)
-          else java.sql.DriverManager.getConnection(url, user, password)
+    df.foreachPartition { (rows: Iterator[Row]) =>
+      if (rows.hasNext) withConn(cfg) { conn =>
+        conn.setAutoCommit(false)
+        val ps = new Array[java.sql.PreparedStatement](stmts.size)
+        val pending = new Array[Int](stmts.size)
+        def flush(): Unit = ps.indices.foreach { i =>
+          if (pending(i) > 0) { ps(i).executeBatch(); pending(i) = 0 }
+        }
         try {
-          conn.setAutoCommit(false)
-          val ps = conn.prepareStatement(stmt.sql)
-          var pending = 0
+          stmts.indices.foreach(i =>
+            ps(i) = conn.prepareStatement(stmts(i).sql))
           rows.foreach { r =>
-            bindRow(ps, stmt.bindOrder, schema, r)
-            ps.addBatch(); pending += 1
-            if (pending >= batchSize) { ps.executeBatch(); pending = 0 }
+            route(r).foreach { i =>
+              bindRow(ps(i), stmts(i).bindOrder, schema, r)
+              ps(i).addBatch(); pending(i) += 1
+            }
+            if (pending.exists(_ >= batchSize)) flush()
           }
-          if (pending > 0) ps.executeBatch()
+          flush()
           conn.commit()
-        } finally conn.close()
+        } catch {
+          case e: Throwable =>
+            try conn.rollback() catch { case _: Throwable => () }
+            throw e
+        } finally ps.foreach(p => if (p != null) p.close())
       }
     }
   }
@@ -155,7 +194,7 @@ object JdbcSync {
   private def bindRow(ps: java.sql.PreparedStatement,
       bindOrder: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
-      r: org.apache.spark.sql.Row): Unit = {
+      r: Row): Unit = {
     import org.apache.spark.sql.types._
     bindOrder.zipWithIndex.foreach { case (cn, pos) =>
       val i = schema.fieldIndex(cn)
@@ -193,64 +232,25 @@ object JdbcSync {
     * in-partition statement order can't race itself. */
   def applyChangeFeed(changes: DataFrame, cfg: JdbcConfig, key: String,
       opCol: String = "op",
-      dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby,
+      dialect: MergeSql.Dialect = MergeSql.Derby,
       batchSize: Int = 1000): Unit = {
-    val schema = changes.schema
-    require(schema.fieldNames.contains(opCol) &&
-      schema.fieldNames.contains(key),
+    val names = changes.schema.fieldNames
+    require(names.contains(opCol) && names.contains(key),
       s"applyChangeFeed: feed must carry '$opCol' and '$key' columns")
-    val valueCols = schema.fieldNames
-      .filterNot(c => c == key || c == opCol).toSeq
-    val mergeStmt = graft.sync.MergeSql.upsert(dialect, cfg.table, key, valueCols)
-    val delStmt = graft.sync.MergeSql.delete(dialect, cfg.table, key)
-    val opIdx = schema.fieldIndex(opCol)
-    val (url, driver, user, password) =
-      (cfg.url, cfg.driver, cfg.user, cfg.password)
-    changes.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        Class.forName(driver)
-        val conn =
-          if (user.isEmpty) java.sql.DriverManager.getConnection(url)
-          else java.sql.DriverManager.getConnection(url, user, password)
-        try {
-          conn.setAutoCommit(false)
-          val merge = conn.prepareStatement(mergeStmt.sql)
-          val del = conn.prepareStatement(delStmt.sql)
-          try {
-            var pendingM = 0; var pendingD = 0
-            rows.foreach { r =>
-              r.getString(opIdx) match {
-                case "I" | "U" =>
-                  bindRow(merge, mergeStmt.bindOrder, schema, r)
-                  merge.addBatch(); pendingM += 1
-                  if (pendingM >= batchSize) {
-                    merge.executeBatch(); pendingM = 0
-                  }
-                case "D" =>
-                  bindRow(del, delStmt.bindOrder, schema, r)
-                  del.addBatch(); pendingD += 1
-                  if (pendingD >= batchSize) {
-                    del.executeBatch(); pendingD = 0
-                  }
-                case other =>
-                  // fail the partition's transaction, never half-apply a
-                  // feed with corrupt ops — rollback keeps the target as
-                  // it was and the retried task re-applies idempotently
-                  throw new IllegalArgumentException(
-                    s"applyChangeFeed: unknown op '$other' (expected I/U/D)")
-              }
-            }
-            if (pendingM > 0) merge.executeBatch()
-            if (pendingD > 0) del.executeBatch()
-            conn.commit()
-          } catch {
-            case e: Throwable =>
-              try conn.rollback() catch { case _: Throwable => () }
-              throw e
-          } finally { merge.close(); del.close() }
-        } finally conn.close()
-      }
-    }
+    val valueCols = names.filterNot(c => c == key || c == opCol).toSeq
+    val opIdx = changes.schema.fieldIndex(opCol)
+    applyPartitions(changes, cfg,
+      Seq(MergeSql.upsert(dialect, cfg.table, key, valueCols),
+        MergeSql.delete(dialect, cfg.table, key)),
+      r => r.getString(opIdx) match {
+        case "I" | "U" => Seq(0)
+        case "D" => Seq(1)
+        // fail the partition's transaction, never half-apply a feed with
+        // corrupt ops — rollback keeps the target as it was and the
+        // retried task re-applies idempotently
+        case other => throw new IllegalArgumentException(
+          s"applyChangeFeed: unknown op '$other' (expected I/U/D)")
+      }, batchSize)
   }
 
   /** Y48b: apply one change-data-feed batch to an SCD2 HISTORY target —
@@ -270,65 +270,26 @@ object JdbcSync {
     * per feed keeps the pair atomic within the partition transaction. */
   def applyScd2Feed(changes: DataFrame, cfg: JdbcConfig, key: String,
       valueCol: String, opCol: String = "op", verCol: String = "ver",
-      dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby,
+      dialect: MergeSql.Dialect = MergeSql.Derby,
       batchSize: Int = 1000): Unit = {
-    val schema = changes.schema
     require(Seq(key, valueCol, opCol, verCol)
-      .forall(schema.fieldNames.contains),
+      .forall(changes.schema.fieldNames.contains),
       s"applyScd2Feed: feed must carry '$key', '$valueCol', '$opCol', " +
         s"'$verCol'")
-    // MergeSql renders bind slots under the names `key`/`value`/"ver";
-    // rebind "ver" to the caller's column via a name view
-    val closeStmt = graft.sync.MergeSql.scd2Close(dialect, cfg.table, key)
-    val openStmt = graft.sync.MergeSql.scd2Open(dialect, cfg.table, key,
-      valueCol)
-    def order(st: graft.sync.MergeSql.Stmt): Seq[String] =
-      st.bindOrder.map(c => if (c == "ver") verCol else c)
-    val (closeOrder, openOrder) = (order(closeStmt), order(openStmt))
-    val opIdx = schema.fieldIndex(opCol)
-    val (url, driver, user, password) =
-      (cfg.url, cfg.driver, cfg.user, cfg.password)
-    changes.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) {
-        Class.forName(driver)
-        val conn =
-          if (user.isEmpty) java.sql.DriverManager.getConnection(url)
-          else java.sql.DriverManager.getConnection(url, user, password)
-        try {
-          conn.setAutoCommit(false)
-          val close = conn.prepareStatement(closeStmt.sql)
-          val open = conn.prepareStatement(openStmt.sql)
-          try {
-            var pending = 0
-            def flush(): Unit = {
-              close.executeBatch(); open.executeBatch(); pending = 0
-            }
-            rows.foreach { r =>
-              r.getString(opIdx) match {
-                case "D" =>
-                  bindRow(close, closeOrder, schema, r)
-                  close.addBatch()
-                case "I" | "U" =>
-                  bindRow(close, closeOrder, schema, r)
-                  close.addBatch()
-                  bindRow(open, openOrder, schema, r)
-                  open.addBatch()
-                case other => throw new IllegalArgumentException(
-                  s"applyScd2Feed: unknown op '$other' (expected I/U/D)")
-              }
-              pending += 1
-              if (pending >= batchSize) flush()
-            }
-            if (pending > 0) flush()
-            conn.commit()
-          } catch {
-            case e: Throwable =>
-              try conn.rollback() catch { case _: Throwable => () }
-              throw e
-          } finally { close.close(); open.close() }
-        } finally conn.close()
-      }
-    }
+    // MergeSql renders bind slots under the name "ver"; rebind it to the
+    // caller's column
+    def rebind(st: MergeSql.Stmt): MergeSql.Stmt =
+      st.copy(bindOrder = st.bindOrder.map(c => if (c == "ver") verCol else c))
+    val opIdx = changes.schema.fieldIndex(opCol)
+    applyPartitions(changes, cfg,
+      Seq(rebind(MergeSql.scd2Close(dialect, cfg.table, key)),
+        rebind(MergeSql.scd2Open(dialect, cfg.table, key, valueCol))),
+      r => r.getString(opIdx) match {
+        case "D" => Seq(0)
+        case "I" | "U" => Seq(0, 1)
+        case other => throw new IllegalArgumentException(
+          s"applyScd2Feed: unknown op '$other' (expected I/U/D)")
+      }, batchSize)
   }
 
   /** One chunk's outcome from [[resumableCopy]]. */
@@ -365,19 +326,10 @@ object JdbcSync {
     */
   def resumableCopy(src: DataFrame, key: String, bounds: Seq[(Long, Long)],
       target: JdbcConfig, progressTable: String,
-      dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby,
+      dialect: MergeSql.Dialect = MergeSql.Derby,
       failAfterChunks: Option[Int] = None): Seq[ChunkReport] = {
     import org.apache.spark.sql.functions.col
-    def withConn[A](f: java.sql.Connection => A): A = {
-      Class.forName(target.driver)
-      val conn =
-        if (target.user.isEmpty)
-          java.sql.DriverManager.getConnection(target.url)
-        else java.sql.DriverManager.getConnection(
-          target.url, target.user, target.password)
-      try f(conn) finally conn.close()
-    }
-    val done: Map[Int, (Long, Long, Long)] = withConn { conn =>
+    val done: Map[Int, (Long, Long, Long)] = withConn(target) { conn =>
       val rs = conn.createStatement()
         .executeQuery(s"SELECT chunk_id, lo, hi, n_rows FROM $progressTable")
       val b = Map.newBuilder[Int, (Long, Long, Long)]
@@ -406,7 +358,7 @@ object JdbcSync {
         val slice = src.filter(col(key) >= lo && col(key) < hi)
         val n = slice.count()
         idempotentAppend(slice, target, key, dialect)
-        withConn { conn =>
+        withConn(target) { conn =>
           val ps = conn.prepareStatement(
             s"INSERT INTO $progressTable (chunk_id, lo, hi, n_rows) " +
               "VALUES (?, ?, ?, ?)")

@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor,
   TTLConfig, TimeMode, TimerValues, ValueState}
 import java.sql.Timestamp
+import graft.sources.JdbcSync
+import graft.sources.JdbcSync.JdbcConfig
 
 /** Structured Streaming surface (SURVEY.md §2.10 T1–T8). Builders are
   * source-agnostic: they take any streaming (or batch — the expressions are
@@ -200,14 +202,6 @@ object StreamOps {
       }
   }
 
-  /** T8+Y5: streaming upsert — each micro-batch is reduced to a
-    * deterministic latest-wins row per PK, then MERGEd into the JDBC
-    * target from the EXECUTORS (foreachPartition) — nothing is collected
-    * to the driver, so the sink scales with the cluster like any batch
-    * JDBC write. The MERGE text comes from the dialect-parameterized
-    * [[graft.sync.MergeSql]] builder (Derby here — the embedded test DB;
-    * the T-SQL rendering is pinned offline in SyncJobSuite).
-    */
   /** Streaming incremental corpus dedup — the production form of the
     * batch l16 operator: documents arrive as a stream, the standing
     * corpus's LSH band index lives as a parquet dir, and each
@@ -477,17 +471,9 @@ object StreamOps {
       false
     } else if (batch.isEmpty) false
     else {
-      val tRow = batch.filter(col("op") === "T")
-        .agg(max(col("_commit_version"))).collect()(0)
-      val cut = if (tRow.isNullAt(0)) Long.MinValue else tRow.getLong(0)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key).orderBy(col("_commit_version").desc)
-      val resolved = batch
-        .filter(col("op") =!= "T" && col("_commit_version") >= cut)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
+      val (cut, resolved) = graft.sync.LakeToJdbc.collapseCdfBatch(batch, key)
       val published =
-        if (versions.isEmpty || cut > Long.MinValue) {
+        if (versions.isEmpty || cut.isDefined) {
           // bootstrap, or reseed: a fresh snapshot publish of the
           // collapsed non-deleted rows (D rows net keys OUT of it)
           val snap = resolved.filter(col("op") =!= "D")
@@ -529,11 +515,19 @@ object StreamOps {
         ()
       }
 
+  /** T8+Y5: streaming upsert — each micro-batch is reduced to a
+    * deterministic latest-wins row per PK, then MERGEd into the JDBC
+    * target from the executors by [[JdbcSync.idempotentAppend]] —
+    * nothing is collected to the driver, so the sink scales with the
+    * cluster like any batch JDBC write. The MERGE text comes from the
+    * dialect-parameterized [[graft.sync.MergeSql]] builder (Derby here —
+    * the embedded test DB; the T-SQL rendering is pinned offline in
+    * SyncJobSuite).
+    */
   def upsertToJdbc(changes: DataFrame, url: String, table: String,
                    driver: String,
                    dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby) = {
-    val mergeStmt = graft.sync.MergeSql.upsert(dialect, table, "user_id",
-      Seq("event_type", "val"))
+    val cfg = JdbcConfig(url, table, driver = driver)
     changes.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val latest = batch.groupBy(col("user_id"))
@@ -541,28 +535,7 @@ object StreamOps {
                       struct(col("ts"), col("event_id"))).as("m"))
           .select(col("user_id"), col("m.event_type").as("event_type"),
                   col("m.value").as("val"))
-        latest.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.hasNext) {
-            Class.forName(driver)
-            val conn = java.sql.DriverManager.getConnection(url)
-            try {
-              conn.setAutoCommit(false)
-              val ps = conn.prepareStatement(mergeStmt.sql)
-              rows.foreach { r =>
-                mergeStmt.bindOrder.zipWithIndex.foreach { case (cn, i) =>
-                  cn match {
-                    case "user_id"    => ps.setLong(i + 1, r.getLong(0))
-                    case "event_type" => ps.setString(i + 1, r.getString(1))
-                    case "val"        => ps.setDouble(i + 1, r.getDouble(2))
-                  }
-                }
-                ps.addBatch()
-              }
-              ps.executeBatch()
-              conn.commit()
-            } finally conn.close()
-          }
-        }
+        JdbcSync.idempotentAppend(latest, cfg, "user_id", dialect)
       }
   }
 
@@ -720,150 +693,52 @@ object StreamOps {
     }
   }
 
-  /** The composed streaming-CDC apply: changelog stream → latest-wins
-    * state → per-batch MERGE (I/U) + DELETE (D) into the JDBC target
-    * from the executors. Pair with a checkpointLocation and
-    * Trigger.AvailableNow for the scheduled incremental-sync shape; the
-    * state store makes the whole pipeline idempotent under restart and
-    * out-of-order delivery. The MERGE/DELETE text comes from the
-    * dialect-parameterized [[graft.sync.MergeSql]] builder (Derby here —
-    * the embedded test DB; the T-SQL rendering for the MS-SQL-shaped
-    * production target is pinned offline in SyncJobSuite) and each row is
-    * bound through the statement's own bind order, so swapping dialects
-    * swaps only the `dialect` argument.
-    */
+  /** The changelog stream through the [[LatestWinsProcessor]] guard,
+    * ready for a `foreachBatch` sink: at most one row per key per
+    * micro-batch, with the `Change` columns (k, v, op, ver). */
+  private def latestWins(changes: Dataset[Change]) = {
+    import changes.sparkSession.implicits._
+    changes.groupByKey(_.k)
+      .transformWithState(new LatestWinsProcessor,
+        TimeMode.None(), OutputMode.Append())
+      .toDF()
+      .writeStream.outputMode("append")
+  }
+
   /** Streaming SCD2 (Y7 ∘ Z3): the CDC apply with HISTORY — instead of
     * overwriting the key's row, each applied change CLOSES the key's
-    * current version (valid_to = ver, is_current = 0; the
-    * `valid_from < ver` guard makes replay a no-op) and, for I/U, OPENS
-    * the new one via a MERGE keyed on (k, valid_from) (a replayed change
-    * re-updates the same history row instead of duplicating it). A
-    * delete closes without opening — the key's history survives, which
-    * is the point of SCD2. Cross-batch ordering is the same
-    * LatestWinsProcessor state as [[cdcToJdbc]]: a stale replayed
-    * version can neither regress the open row nor interleave history.
-    * Close batch executes before open batch; per key a micro-batch
-    * carries at most one (winning) change, so the pair is atomic within
-    * the partition's transaction. Both statement texts come from the
-    * dialect-parameterized builders (Derby e2e here; T-SQL renderings
-    * pinned offline in SyncJobSuite).
+    * current version and, for I/U, OPENS the new one
+    * ([[JdbcSync.applyScd2Feed]] with `ver` as the clock: the close guard
+    * and the (k, valid_from) open MERGE make replay a no-op). A delete
+    * closes without opening — the key's history survives, which is the
+    * point of SCD2. Cross-batch ordering is the same LatestWinsProcessor
+    * state as [[cdcToJdbc]]: a stale replayed version can neither
+    * regress the open row nor interleave history.
     */
   def cdcToJdbcScd2(changes: Dataset[Change], url: String, table: String,
                     driver: String,
                     dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby) = {
-    val closeStmt = graft.sync.MergeSql.scd2Close(dialect, table, "k")
-    val openStmt = graft.sync.MergeSql.scd2Open(dialect, table, "k", "v")
-    import changes.sparkSession.implicits._
-    changes.groupByKey(_.k)
-      .transformWithState(new LatestWinsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF()
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.hasNext) {
-            Class.forName(driver)
-            val conn = java.sql.DriverManager.getConnection(url)
-            try {
-              conn.setAutoCommit(false)
-              val close = conn.prepareStatement(closeStmt.sql)
-              val open = conn.prepareStatement(openStmt.sql)
-              def bind(ps: java.sql.PreparedStatement, order: Seq[String],
-                       c: Change): Unit =
-                order.zipWithIndex.foreach { case (cn, i) => cn match {
-                  case "k"   => ps.setLong(i + 1, c.k)
-                  case "v"   => ps.setString(i + 1, c.v)
-                  case "ver" => ps.setLong(i + 1, c.ver)
-                }}
-              try {
-                rows.foreach { r =>
-                  val c = Change(r.getLong(0), if (r.isNullAt(1)) null
-                    else r.getString(1), r.getString(2), r.getLong(3))
-                  c.op match {
-                    case "D" =>
-                      bind(close, closeStmt.bindOrder, c); close.addBatch()
-                    case "I" | "U" =>
-                      bind(close, closeStmt.bindOrder, c); close.addBatch()
-                      bind(open, openStmt.bindOrder, c); open.addBatch()
-                    case other =>
-                      throw new IllegalArgumentException(
-                        s"cdcToJdbcScd2: unknown changelog op '$other' for key ${c.k} " +
-                          "(expected I, U or D)")
-                  }
-                }
-                close.executeBatch(); open.executeBatch()
-                conn.commit()
-              } catch {
-                case e: Throwable =>
-                  try conn.rollback() catch { case _: Throwable => () }
-                  throw e
-              } finally { close.close(); open.close() }
-            } finally conn.close()
-          }
-        }
-      }
+    val cfg = JdbcConfig(url, table, driver = driver)
+    latestWins(changes).foreachBatch { (batch: DataFrame, _: Long) =>
+      JdbcSync.applyScd2Feed(batch, cfg, "k", "v", "op", "ver", dialect)
+    }
   }
 
+  /** The composed streaming-CDC apply: changelog stream → latest-wins
+    * state → per-batch MERGE (I/U) + DELETE (D) into the JDBC target
+    * from the executors ([[JdbcSync.applyChangeFeed]]). Pair with a
+    * checkpointLocation and Trigger.AvailableNow for the scheduled
+    * incremental-sync shape; the state store makes the whole pipeline
+    * idempotent under restart and out-of-order delivery. The statement
+    * text comes from the dialect-parameterized [[graft.sync.MergeSql]]
+    * builder, so swapping dialects swaps only the `dialect` argument.
+    */
   def cdcToJdbc(changes: Dataset[Change], url: String, table: String,
                 driver: String,
                 dialect: graft.sync.MergeSql.Dialect = graft.sync.MergeSql.Derby) = {
-    val mergeStmt = graft.sync.MergeSql.upsert(dialect, table, "k", Seq("v", "ver"))
-    val delStmt = graft.sync.MergeSql.delete(dialect, table, "k")
-    import changes.sparkSession.implicits._
-    changes.groupByKey(_.k)
-      .transformWithState(new LatestWinsProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF()
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.hasNext) {
-            Class.forName(driver)
-            val conn = java.sql.DriverManager.getConnection(url)
-            try {
-              conn.setAutoCommit(false)
-              val merge = conn.prepareStatement(mergeStmt.sql)
-              val del = conn.prepareStatement(delStmt.sql)
-              def bind(ps: java.sql.PreparedStatement, order: Seq[String],
-                       c: Change): Unit =
-                order.zipWithIndex.foreach { case (cn, i) => cn match {
-                  case "k"   => ps.setLong(i + 1, c.k)
-                  case "v"   => ps.setString(i + 1, c.v)
-                  case "ver" => ps.setLong(i + 1, c.ver)
-                }}
-              try {
-                rows.foreach { r =>
-                  val c = Change(r.getLong(0), if (r.isNullAt(1)) null
-                    else r.getString(1), r.getString(2), r.getLong(3))
-                  c.op match {
-                    case "D" =>
-                      bind(del, delStmt.bindOrder, c); del.addBatch()
-                    case "I" | "U" =>
-                      bind(merge, mergeStmt.bindOrder, c); merge.addBatch()
-                    case other =>
-                      // Change's contract is op ∈ {I,U,D}; anything else
-                      // (malformed changelog JSON decodes op as null) must
-                      // fail the batch, not silently merge corrupt rows —
-                      // the rollback path below keeps the target untouched
-                      throw new IllegalArgumentException(
-                        s"cdcToJdbc: unknown changelog op '$other' for key ${c.k} " +
-                          "(expected I, U or D)")
-                  }
-                }
-                merge.executeBatch(); del.executeBatch()
-                conn.commit()
-              } catch {
-                case e: Throwable =>
-                  // roll back EXPLICITLY before close: with autoCommit
-                  // off, close-with-open-transaction is driver-defined
-                  // (some drivers COMMIT), which would persist a partial
-                  // batch the retry assumes was never applied
-                  try conn.rollback() catch { case _: Throwable => () }
-                  throw e
-              } finally { merge.close(); del.close() }
-            } finally conn.close()
-          }
-        }
-      }
+    val cfg = JdbcConfig(url, table, driver = driver)
+    latestWins(changes).foreachBatch { (batch: DataFrame, _: Long) =>
+      JdbcSync.applyChangeFeed(batch, cfg, "k", "op", dialect)
+    }
   }
 }

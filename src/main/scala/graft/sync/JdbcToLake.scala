@@ -51,18 +51,13 @@ object JdbcToLake {
   private def keyBounds(cfg: JdbcConfig, keyCol: String): (Long, Long) = {
     require(keyCol.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"keyBounds: invalid key identifier '$keyCol'")
-    Class.forName(cfg.driver)
-    val conn =
-      if (cfg.user.isEmpty) java.sql.DriverManager.getConnection(cfg.url)
-      else java.sql.DriverManager.getConnection(cfg.url, cfg.user,
-        cfg.password)
-    try {
+    JdbcSync.withConn(cfg) { conn =>
       val rs = conn.createStatement().executeQuery(
         s"SELECT MIN($keyCol), MAX($keyCol) FROM ${cfg.table}")
       rs.next()
       val lo = rs.getLong(1); val hi = rs.getLong(2)
       if (rs.wasNull()) (0L, 1L) else (lo, hi)
-    } finally conn.close()
+    }
   }
 
   /** The source snapshot under lake naming, scanned with `readers`

@@ -3,7 +3,7 @@ package graft.sync
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.JdbcSync
-import graft.sources.JdbcSync.JdbcConfig
+import graft.sources.JdbcSync.{JdbcConfig, withConn}
 
 /** Y48: LAKE → JDBC INCREMENTAL SYNC — the flagship composition that
   * closes the loop between the repo's two halves. The reference's job
@@ -113,15 +113,8 @@ object LakeToJdbc {
       lake: org.apache.spark.sql.DataFrame, key: String,
       cfg: JdbcConfig, keyUp: String, readers: Int)
       : org.apache.spark.sql.DataFrame = {
-    val integral = lake.schema(key).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     val part =
-      if (!integral || readers <= 1) None
+      if (!integralKey(lake, key) || readers <= 1) None
       else {
         val b = lake.agg(min(col(key)).cast("long"),
           max(col(key)).cast("long")).collect()(0)
@@ -156,13 +149,6 @@ object LakeToJdbc {
         (if (conds.isEmpty) ""
          else conds.mkString(" WHERE ", " AND ", "")) + ") AS SYNC_V")
     }
-    val integral = lake.schema(key).dataType match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType => true
-      case _ => false
-    }
     def full(readers: Int): Boolean =
       SyncJob.validate(lake,
         fullTargetRead(s, lake, key, scoped(None), keyUp, readers),
@@ -170,7 +156,7 @@ object LakeToJdbc {
     mode match {
       case Validation.Full(readers) => (full(readers), "full")
       case Validation.Sampled(_, fullEvery, readers)
-          if !integral ||
+          if !integralKey(lake, key) ||
             (fullEvery > 0 && toVersion % fullEvery == 0) =>
         (full(readers), "full")
       case Validation.Sampled(buckets, _, _) =>
@@ -209,25 +195,48 @@ object LakeToJdbc {
       jdbcName: String => String = _.toUpperCase,
       dialect: MergeSql.Dialect = MergeSql.Derby): Unit = {
     if (batch.isEmpty) return
+    val (cut, resolved) = collapseCdfBatch(batch, key)
+    if (cut.isDefined) execDdl(cfg, s"DELETE FROM ${cfg.table}")
+    JdbcSync.applyChangeFeed(
+      jdbcNamed(resolved.drop("_commit_version"), jdbcName), cfg,
+      jdbcName(key), "op", dialect)
+  }
+
+  /** One `graftlake-cdf` micro-batch under rules 1–2 of
+    * [[applyCdfBatch]]: the newest `T` (reseed) version in the batch, if
+    * any, and the rows stamped at or after it, collapsed latest-wins per
+    * key (`T` rows dropped, `_commit_version` kept). The caller decides
+    * what a reseed means for its target. */
+  private[graft] def collapseCdfBatch(batch: org.apache.spark.sql.DataFrame,
+      key: String): (Option[Long], org.apache.spark.sql.DataFrame) = {
     val tVer = batch.filter(col("op") === "T")
       .agg(max(col("_commit_version"))).collect()(0)
-    val cut =
-      if (tVer.isNullAt(0)) Long.MinValue
-      else {
-        withConn(cfg)(_.createStatement()
-          .executeUpdate(s"DELETE FROM ${cfg.table}"))
-        tVer.getLong(0)
-      }
+    val cut = if (tVer.isNullAt(0)) None else Some(tVer.getLong(0))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(key).orderBy(col("_commit_version").desc)
-    val resolved = batch
-      .filter(col("op") =!= "T" && col("_commit_version") >= cut)
+    (cut, batch
+      .filter(col("op") =!= "T" &&
+        col("_commit_version") >= cut.getOrElse(Long.MinValue))
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "_commit_version")
-    val feed = resolved.select(
-      (col("op") +: resolved.columns.filterNot(_ == "op").toSeq
-        .map(c => col(c).as(jdbcName(c)))): _*)
-    JdbcSync.applyChangeFeed(feed, cfg, jdbcName(key), "op", dialect)
+      .filter(col("__rn") === 1).drop("__rn"))
+  }
+
+  /** A lake frame under target names: `op` stays, every other column
+    * maps through `jdbcName`. */
+  private def jdbcNamed(df: org.apache.spark.sql.DataFrame,
+      jdbcName: String => String): org.apache.spark.sql.DataFrame =
+    df.select(df.columns.toSeq.map(c =>
+      if (c == "op") col(c) else col(c).as(jdbcName(c))): _*)
+
+  /** MOD-bucket sampling and range-partitioned reads need an integral
+    * key. */
+  private def integralKey(df: org.apache.spark.sql.DataFrame,
+      key: String): Boolean = {
+    import org.apache.spark.sql.types._
+    df.schema(key).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
   }
 
   /** Y55: CONTINUOUS lake→JDBC mirror — the reference's job as a LIVE
@@ -274,8 +283,7 @@ object LakeToJdbc {
       writers: Int = 1, bulk: Boolean = false): Long = {
     val snap = graft.ops.Sync.readVersionLogical(s,
       s"$lakeRoot/v$version", key)
-    val up = snap.select(snap.columns.toSeq
-      .map(c => col(c).as(jdbcName(c))): _*)
+    val up = jdbcNamed(snap, jdbcName)
     // `bulk` = batched plain INSERTs — the retry-FREE case writeTable's
     // own scaladoc carves out: a seed lands in a fresh, just-created
     // table and is validated before the incremental cadence starts, so
@@ -322,9 +330,7 @@ object LakeToJdbc {
     // one churn-sized pass: per-op counts via observe on the SAME scan
     // that feeds the JDBC writers (no second extraction job)
     val obs = org.apache.spark.sql.Observation()
-    val feed = cdf.changes.select(
-        (col("op") +: cdf.changes.columns.filterNot(_ == "op").toSeq
-          .map(c => col(c).as(jdbcName(c)))): _*)
+    val feed = jdbcNamed(cdf.changes, jdbcName)
       .repartitionByRange(writers, col(jdbcName(key)))
       .observe(obs,
         count(when(col("op") === "I", 1)).as("nI"),
@@ -594,9 +600,7 @@ object LakeToJdbc {
       val feeds0 = changed.map { case (m, w, liveV, _) =>
         val cdf = graft.ops.Sync.lakeChanges(s, s"$root/${m.table}",
           w.get, liveV, m.key)
-        val feed = cdf.changes.select(
-            (col("op") +: cdf.changes.columns.filterNot(_ == "op").toSeq
-              .map(c => col(c).as(jdbcName(c)))): _*)
+        val feed = jdbcNamed(cdf.changes, jdbcName)
           .repartitionByRange(writers, col(jdbcName(m.key)))
         (m, w.get, liveV, feed, cdf)
       }
@@ -724,15 +728,6 @@ object LakeToJdbc {
 
   private def execDdl(cfg: JdbcConfig, sql: String): Unit =
     withConn(cfg)(_.createStatement().execute(sql))
-
-  private def withConn[A](cfg: JdbcConfig)(f: java.sql.Connection => A): A = {
-    Class.forName(cfg.driver)
-    val conn =
-      if (cfg.user.isEmpty) java.sql.DriverManager.getConnection(cfg.url)
-      else java.sql.DriverManager.getConnection(cfg.url, cfg.user,
-        cfg.password)
-    try f(conn) finally conn.close()
-  }
 
   /** Y48b: one incremental step into an SCD2 HISTORY target
     * ([[JdbcSync.applyScd2Feed]]) — the warehouse shape where the

@@ -36,6 +36,8 @@ class ContractSuite extends AnyFunSuite with SparkFixture {
     try {
       assert(Bench.num(1.5) == "1.500", "a German locale leaked into JSON")
       assert(Bench.num(12.0, 1) == "12.0")
+      assert(graft.ops.LlmPipeline.planeSql(Array(0.5)) == "[0.500000]::DOUBLE[]",
+        "a German locale leaked into the oracle SQL")
     } finally java.util.Locale.setDefault(was)
   }
 

@@ -147,6 +147,47 @@ class JdbcSyncSuite extends AnyFunSuite with SparkFixture {
     assert(readTable(spark, tcfg, None).count() == o.count())
   }
 
+  test("rollback law: a failing batch rolls the partition back and surfaces the real error") {
+    val spark0 = spark
+    import spark0.implicits._
+    val rcfg = cfg.copy(table = "ROLLBACK_LAW")
+    Class.forName(rcfg.driver)
+    def onConn[A](f: java.sql.Connection => A): A = {
+      val conn = java.sql.DriverManager.getConnection(rcfg.url)
+      try f(conn) finally conn.close()
+    }
+    def count(): Long = onConn { conn =>
+      val rs = conn.createStatement()
+        .executeQuery("SELECT COUNT(*) FROM ROLLBACK_LAW")
+      rs.next(); rs.getLong(1)
+    }
+    onConn(_.createStatement().execute(
+      "CREATE TABLE ROLLBACK_LAW (K BIGINT NOT NULL PRIMARY KEY, " +
+        "V VARCHAR(8) NOT NULL)"))
+    // one partition, one row per batch: the first batch lands, the
+    // second violates NOT NULL
+    val rows = Seq((1L, "a"), (2L, null: String)).toDF("K", "V").coalesce(1)
+    val err = intercept[Exception] {
+      idempotentAppend(rows, rcfg, "K", batchSize = 1)
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    val states = causes.flatMap {
+      case e: java.sql.SQLException =>
+        Iterator.iterate(e)(_.getNextException).takeWhile(_ != null)
+          .map(_.getSQLState).toSeq
+      case _ => Nil
+    }
+    assert(states.contains("23502") && !states.contains("25001"),
+      s"the NOT NULL violation must surface, not a close failure: " +
+        s"$states / ${causes.map(_.toString).mkString(" <- ")}")
+    assert(count() == 0, "the first batch must have been rolled back")
+    // no lock or open transaction is left behind on the table
+    applyChangeFeed(Seq(("I", 1L, "a"), ("I", 2L, "b"))
+      .toDF("op", "K", "V").coalesce(1), rcfg, "K")
+    assert(count() == 2)
+  }
+
   test("Y48 law: CDF-driven lake→JDBC sync converges, replays idempotently, and chains across versions") {
     import graft.ops.Sync
     val spark0 = spark
