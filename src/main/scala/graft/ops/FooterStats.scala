@@ -85,6 +85,31 @@ private[graft] object FooterStats {
     } finally pool.shutdown()
   }
 
+  /** Do the footers of `files` PROVE that no row holds a null in any
+    * of `cols`? Every row group must record a null count of zero for
+    * each column; a missing column or an unset count answers false, so
+    * the caller can only err towards its slower path. */
+  def nullFree(conf: Configuration, files: Seq[FileStatus],
+      cols: Seq[String]): Boolean =
+    files.forall { st =>
+      try {
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromStatus(st, conf))
+        try {
+          val blocks = reader.getFooter.getBlocks
+          (0 until blocks.size()).forall { i =>
+            val chunks = blocks.get(i).getColumns
+            cols.forall(c => (0 until chunks.size()).exists { j =>
+              val ch = chunks.get(j)
+              val stats = ch.getStatistics
+              ch.getPath.toDotString == c && stats != null &&
+                stats.isNumNullsSet && stats.getNumNulls == 0L
+            })
+          }
+        } finally reader.close()
+      } catch { case _: Exception => false }
+    }
+
   private def sparkTypeOf(ptn: PrimitiveTypeName)
       : org.apache.spark.sql.types.DataType = ptn match {
     case PrimitiveTypeName.INT64 => org.apache.spark.sql.types.LongType

@@ -180,7 +180,7 @@ object Sync {
       partCol: Option[String] = None): Boolean = {
     val staging = s"$root/_staging_v$version"
     writer(df, partCol).mode("overwrite").parquet(staging)
-    publishStagedDir(s, root, version, validate)
+    publishStagedDir(s, root, version, v => validate(v))
   }
 
   /** `df.write`, Hive-partitioned by `partCol` when there is one. A
@@ -192,9 +192,15 @@ object Sync {
   /** Validate + rename + pointer-swap an ALREADY-POPULATED
     * `_staging_v{n}` dir — the tail of [[publish]], exposed so callers
     * that assemble a version from mixed sources (y38's rewritten +
-    * verbatim-copied files) still go through the one swap protocol. */
+    * verbatim-copied files) still go through the one swap protocol.
+    * `validate` takes the staged view BY NAME: a gate answered from
+    * metadata ([[manifestValidate]]) never builds it. `staged` is the
+    * manifest the caller just wrote into staging; once the rename makes
+    * it a published manifest it seeds [[manifestLocal]]'s cache, so the
+    * commit's own readers never re-read it. */
   private[graft] def publishStagedDir(s: SparkSession, root: String,
-      version: Int, validate: DataFrame => Boolean): Boolean = {
+      version: Int, validate: (=> DataFrame) => Boolean,
+      staged: Option[LocalManifest] = None): Boolean = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     val staging = new Path(s"$root/_staging_v$version")
@@ -250,6 +256,7 @@ object Sync {
       fs.delete(staging, true)
       return false
     }
+    staged.foreach(seedManifest(fs, finalDir.toString, _))
     swapPointer(fs, root, version)
     true
   }
@@ -471,9 +478,28 @@ object Sync {
     val (kt, rows) = statRows(s, files, dir, key, mintDirName(p.getName),
       None, partCol.nonEmpty)
     val kt2 = if (rows.isEmpty) org.apache.spark.sql.types.LongType else kt
-    s.createDataFrame(java.util.Arrays.asList(rows: _*),
-        manifestSchema(kt2, partCol.nonEmpty))
-      .write.mode("overwrite").parquet(s"$dir/_file_stats")
+    val lm = writeManifest(s, dir, manifestSchema(kt2, partCol.nonEmpty),
+      rows.toSeq)
+    if (!p.getName.startsWith("_staging_")) seedManifest(fs, dir, lm)
+  }
+
+  /** Write `rows` as `dir`'s `_file_stats` (one file, rows in order) and
+    * return them as a cold [[manifestLocal]] read of that file would:
+    * nullable schema, values through Spark's own converters, rows
+    * carrying their schema. */
+  private def writeManifest(s: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): LocalManifest = {
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_file_stats")
+    val read = org.apache.spark.sql.types.StructType(
+      schema.fields.map(_.copy(nullable = true)))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(read)
+    val toScala = CatalystTypeConverters.createToScalaConverter(read)
+    LocalManifest(read, rows.map(r =>
+      toScala(toCatalyst(r)).asInstanceOf[org.apache.spark.sql.Row])
+      .toIndexedSeq)
   }
 
   /** The normalized manifest of `root/$vName` — guaranteed to carry
@@ -532,6 +558,32 @@ object Sync {
   private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, Long, LocalManifest)]()
 
+  /** (total length, mtime/name/length hash) of a `_file_stats` dir's
+    * listing; (-1, -1) when it cannot be listed. */
+  private def manifestSig(fs: org.apache.hadoop.fs.FileSystem,
+      dirP: org.apache.hadoop.fs.Path): (Long, Long) =
+    try {
+      val sts = fs.listStatus(dirP)
+      (sts.map(_.getLen).sum,
+       sts.map(_.getModificationTime).max ^ (sts.length.toLong << 48) ^
+         sts.map(st => (st.getPath.getName, st.getLen,
+           st.getModificationTime).hashCode.toLong & 0xffffffffL)
+           .foldLeft(0L)(_ ^ _))
+    } catch { case _: java.io.IOException => (-1L, -1L) }
+
+  /** Seed the cache with the manifest a commit just wrote under the
+    * published version dir `dir` — rows from [[writeManifest]], which
+    * equal a cold read, so the commit's own readers run no job. */
+  private def seedManifest(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String, lm: LocalManifest): Unit = {
+    val dirP = new org.apache.hadoop.fs.Path(s"$dir/_file_stats")
+    val sig = manifestSig(fs, dirP)
+    if (sig._1 >= 0) {
+      if (manifestCache.size > 4096) manifestCache.clear()
+      manifestCache.put(dirP.toString, (sig._1, sig._2, lm))
+    }
+  }
+
   private[graft] def manifestLocal(s: SparkSession, root: String,
       vName: String): LocalManifest = {
     import org.apache.hadoop.fs.Path
@@ -543,15 +595,7 @@ object Sync {
     // the per-file signature below additionally covers renames/count
     // changes for the published case)
     val cacheable = !vName.startsWith("_staging_")
-    val sig =
-      try {
-        val sts = fs.listStatus(dirP)
-        (sts.map(_.getLen).sum,
-         sts.map(_.getModificationTime).max ^ (sts.length.toLong << 48) ^
-           sts.map(st => (st.getPath.getName, st.getLen,
-             st.getModificationTime).hashCode.toLong & 0xffffffffL)
-             .foldLeft(0L)(_ ^ _))
-      } catch { case _: java.io.IOException => (-1L, -1L) }
+    val sig = manifestSig(fs, dirP)
     val key = dirP.toString
     val hit = if (cacheable) manifestCache.get(key) else null
     if (hit != null && sig._1 >= 0 &&
@@ -602,33 +646,43 @@ object Sync {
     * `dir` = the version the rename will mint), unioned with the
     * CARRIED rows verbatim — each still naming the dir where its file
     * physically lives — and written as the staged `_file_stats`. The
-    * carried frame's columns say whether the version is partitioned.
-    * Returns Σ n_rows over the new rows (the publish gate's input). */
+    * carried manifest's columns say whether the version is partitioned.
+    * Returns Σ n_rows over the new rows (the publish gate's input) and
+    * the manifest as written (for [[publishStagedDir]]'s cache seed). */
   private def writeStagedManifest(s: SparkSession, root: String,
-      toVersion: Int, key: String, carried: DataFrame): Long = {
+      toVersion: Int, key: String,
+      carried: LocalManifest): (Long, LocalManifest) = {
     import org.apache.hadoop.fs.Path
     val staging = s"$root/_staging_v$toVersion"
     val fs = new Path(staging)
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(staging))) fs.mkdirs(new Path(staging))
-    val partitioned = carried.columns.contains("part")
-    val carriedN = carried.select(manifestCols(partitioned).map(col): _*)
+    val (schemaN, carriedRows) = manifestProjected(carried)
+    val partitioned = schemaN.fieldNames.contains("part")
     // the new rows must carry the CARRIED manifest's kmin/kmax type, or
-    // the union below would write a mixed-type column: a footer sweep
+    // the manifest would hold a mixed-type column: a footer sweep
     // that disagrees (the carried manifest came from a scan) retries
     // with the grouped scan before refusing
-    val carriedKt = carriedN.schema("kmin").dataType
+    val carriedKt = schemaN("kmin").dataType
     val (kt, newRows) = statRows(s, dataFiles(fs, staging), staging, key,
       s"v$toVersion", Some(carriedKt), partitioned)
     require(newRows.isEmpty || kt == carriedKt,
       s"writeStagedManifest: staged key type $kt != carried $carriedKt")
-    s.createDataFrame(java.util.Arrays.asList(newRows: _*),
-        carriedN.schema)
-      .unionByName(carriedN)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$staging/_file_stats")
+    val lm = writeManifest(s, staging, schemaN, newRows.toSeq ++ carriedRows)
     val iRows = manifestCols(partitioned).indexOf("n_rows")
-    newRows.map(_.getLong(iRows)).sum
+    (newRows.map(_.getLong(iRows)).sum, lm)
+  }
+
+  /** A manifest's rows projected onto [[manifestCols]] — the layout every
+    * writer stores (a legacy normalized manifest may order them
+    * differently). */
+  private def manifestProjected(m: LocalManifest)
+      : (org.apache.spark.sql.types.StructType,
+         Seq[org.apache.spark.sql.Row]) = {
+    val cols = manifestCols(m.schema.fieldNames.contains("part"))
+    val idx = cols.map(m.schema.fieldIndex)
+    (org.apache.spark.sql.types.StructType(cols.map(m.schema(_))),
+     m.rows.map(r => org.apache.spark.sql.Row.fromSeq(idx.map(r.get))))
   }
 
   /** Read manifest (file, dir) pairs under `schema`: one multi-path read
@@ -647,17 +701,21 @@ object Sync {
         .parquet(g.map(e => s"$root/$d/${e._1}"): _*)
     }.reduce(_.unionByName(_))
 
-  /** Y55: CDF-ON-WRITE — opt-in per lake root (`enableCdf`). Every
-    * mutation path stages a `_changes` sidecar INSIDE the version dir
-    * it publishes: the RESOLVED batch the commit applied (op ∈
-    * {I,U,D,T} + the logical columns + `_commit_version`), Delta's
-    * CDC-file idiom under this publish protocol. y41's `lakeChanges`
-    * derives the net diff after the fact by re-scanning churned files;
-    * the on-write feed makes the delta a pure METADATA READ — which is
-    * what turns the lake into a streaming SOURCE: a change reader
-    * (`graftlake-cdf`) lists `_changes` per version, never diffing,
-    * never scanning data files. The feed is the applied batch, not the
-    * minimal net diff (a U identical to the current row still rides);
+  /** Y55: CDF-ON-WRITE — opt-in per lake root (`enableCdf`; JDBC
+    * capture turns it on for its own roots). Every mutation path stages
+    * a `_changes` sidecar INSIDE the version dir it publishes: the
+    * RESOLVED batch the commit applied (op ∈ {I,U,D,T} + the logical
+    * columns + `_commit_version`), Delta's CDC-file idiom under this
+    * publish protocol, holding at most one row per row identity. The
+    * committed feed is the change EXTRACTOR: [[lakeChanges]] — and with
+    * it catch-up, incremental and SCD2 sync — reads it through the
+    * `graftlake-cdf` reader, and the streaming mirror consumes the same
+    * files; the delta is a read of what the writer already derived,
+    * never a re-diff of data files. The y41 diff of the files
+    * ([[derivedChanges]]) is the FALLBACK: versions without a feed, a
+    * reseed (`T`) in the range, roots without CDF, and the both-images
+    * form y42 needs. The feed is the applied batch, not the minimal net
+    * diff (a U identical to the current row still rides);
     * replay-idempotent MERGE consumers converge on either, and
     * consumers needing minimal diffs keep y41. One rule trims it: a D
     * whose key the source version's deletion vector already hides
@@ -796,12 +854,21 @@ object Sync {
           lit("D").as("op"), lit(1L).as("version"))))
   }
 
+  /** One row per row identity `ids`: the first by `order` — the y4
+    * latest-wins collapse shared by the cow writer and the feed
+    * readers. */
+  private[graft] def latestWins(df: DataFrame, ids: Seq[String],
+      order: org.apache.spark.sql.Column): DataFrame =
+    df.withColumn("__rn", row_number().over(
+        Window.partitionBy(ids.map(col): _*).orderBy(order)))
+      .filter(col("__rn") === 1).drop("__rn")
+
   /** The cow-family publish gate: staged version non-empty, answered
     * from the just-written manifest rows when row counts are complete
     * (zero IO), else the reader-shaped head(1) probe. `stagedRows` =
     * Σ n_rows over the NEW manifest rows ([[writeStagedManifest]]). */
   private[graft] def manifestValidate(stagedRows: Long,
-      carried: LocalManifest): DataFrame => Boolean =
+      carried: LocalManifest): (=> DataFrame) => Boolean =
     carried.nRowsTotal match {
       case Some(c) => _ => stagedRows + c > 0L
       case None => _.head(1).nonEmpty
@@ -859,18 +926,16 @@ object Sync {
     val owns = (partCol.map(p => col(p).cast("string") === col("part"))
       .toSeq :+ (col(key) >= col("kmin") && col(key) <= col("kmax")))
       .reduce(_ && _)
-    val wv = Window.partitionBy(ids.map(col): _*)
-      .orderBy(col("version").desc)
     // the resolved (latest-wins) batch is consumed 4-5x in one mutation
     // (prune keys, span routing x2 subtrees, the CDF stage, the DV
     // drop) — pre-r14 each consumption re-derived it from the caller's
     // source scans plus the window shuffle; persist the churn-sized
     // result for the mutation's duration instead (unpersisted below)
-    val latest = changes.withColumn("__rn", row_number().over(wv))
-      .filter(col("__rn") === 1).drop("__rn").persist()
+    val latest = latestWins(changes, ids, col("version").desc).persist()
     try {
       val upserts = latest.filter(col("op") =!= "D").drop("op", "version")
-      val changeKeys = latest.select(ids.map(col): _*).distinct()
+      // `latest` holds one row per identity — its keys need no distinct
+      val changeKeys = latest.select(ids.map(col): _*)
       // one collect prunes the manifest AND flags the append frontier:
       // a batch row that no file owns is an upsert past every span (or
       // a D of a key the version never held)
@@ -920,8 +985,8 @@ object Sync {
       // zero-copy carry: untouched files ride as manifest references
       // (filtered by the churn-sized affected set, driver-local)
       val carriedL = statsL.filterFiles(!affectedSet(_))
-      val newRows = writeStagedManifest(s, root, toVersion, key,
-        carriedL.df(s))
+      val (newRows, staged) = writeStagedManifest(s, root, toVersion, key,
+        carriedL)
       // MOR interplay, carried DV: an UPSERT re-asserts its key's
       // existence (CDC semantics — I/U means the row exists at the
       // source NOW), so the vector drops every upserted key. On a flat
@@ -950,7 +1015,7 @@ object Sync {
             .drop("version"), toVersion)
       carrySidecar(s, fromDir, staging.toString, "_schema")
       val ok = publishStagedDir(s, root, toVersion,
-        manifestValidate(newRows, carriedL))
+        manifestValidate(newRows, carriedL), Some(staged))
       CowReport(ok, affected.length + untouched.length, affected.length,
         affected, untouched)
     } finally latest.unpersist(blocking = false)
@@ -1061,8 +1126,8 @@ object Sync {
     }
     // zero-copy carry: adequately-sized files ride as manifest refs
     val carriedL = statsL.filterFiles(!rewrittenSet(_))
-    val newRows = writeStagedManifest(s, root, toVersion, key,
-      carriedL.df(s))
+    val (newRows, staged) = writeStagedManifest(s, root, toVersion, key,
+      carriedL)
     // compaction is a PURE layout change: a MOR deletion vector on the
     // source version still subtracts the same keys from the new one —
     // dropping it here would resurrect every MOR-deleted row
@@ -1073,7 +1138,7 @@ object Sync {
         versionSchema(s, fromDir), toVersion)
     carrySidecar(s, fromDir, staging.toString, "_schema")
     val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newRows, carriedL))
+      manifestValidate(newRows, carriedL), Some(staged))
     CowReport(ok, nFiles, rewritten.length, rewritten, untouched)
   }
 
@@ -1110,8 +1175,8 @@ object Sync {
     // pre-r13 stand-in still copied the table through the driver
     val statsL = manifestLocal(s, root, s"v$fromVersion")
     val files = statsL.files.sorted
-    val newRows = writeStagedManifest(s, root, toVersion, key,
-      statsL.df(s))
+    val (newRows, staged) = writeStagedManifest(s, root, toVersion, key,
+      statsL)
     carrySidecar(s, fromDir, staging.toString, "_schema")
     val prior =
       if (fs.exists(new Path(s"$fromDir/_deletes")))
@@ -1130,7 +1195,7 @@ object Sync {
           .withColumn("op", lit("D")),
         toVersion)
     val ok = publishStagedDir(s, root, toVersion,
-      manifestValidate(newRows, statsL))
+      manifestValidate(newRows, statsL), Some(staged))
     CowReport(ok, files.length, 0, Nil, files)
   }
 
@@ -1344,22 +1409,12 @@ object Sync {
     * INCREMENTAL consumers need — y42's view maintenance subtracts the
     * pre-image and adds the post-image, and a group-key change only
     * moves between groups when both images travel together.
-    * [[lakeChanges]] is the single-image projection of this. */
+    * [[derivedChanges]] is the single-image projection of this. */
   private[graft] def lakeChangesImages(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String): CdfReport = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-    // a version's file set from its MANIFEST — (file, physical dir)
-    // pairs, so a zero-copy carried file is PROVABLY unchanged (same
-    // identity row in both manifests = the same physical file, a
-    // strictly stronger claim than the old name+length match). A
-    // manifest-less version (pre-r13 snapshot) falls back to its
-    // listing, all-local by construction.
-    def fileSet(v: Int): Map[String, String] =
-      if (fs.exists(new Path(s"$root/v$v/_file_stats")))
-        manifestDf(s, root, s"v$v").select("file", "dir").collect()
-          .map(r => r.getString(0) -> r.getString(1)).toMap
-      else dataFiles(fs, s"$root/v$v").map(_._2 -> s"v$v").toMap
+    def fileSet(v: Int): Map[String, String] = versionFiles(s, fs, root, v)
     val fromFiles = fileSet(fromVersion)
     val toFiles = fileSet(toVersion)
     val partCol = partColIn(fromFiles.keys ++ toFiles.keys)
@@ -1449,7 +1504,82 @@ object Sync {
       fromFiles.size, toFiles.size, ids)
   }
 
+  /** A version's file set from its MANIFEST — (file, physical dir)
+    * pairs, so a zero-copy carried file is PROVABLY unchanged (same
+    * identity row in both manifests = the same physical file, a
+    * strictly stronger claim than the old name+length match). A
+    * manifest-less version (pre-r13 snapshot) falls back to its
+    * listing, all-local by construction. */
+  private def versionFiles(s: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, root: String,
+      v: Int): Map[String, String] =
+    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/v$v/_file_stats"))) {
+      val m = manifestLocal(s, root, s"v$v")
+      val (fi, di) = (m.schema.fieldIndex("file"), m.schema.fieldIndex("dir"))
+      m.rows.map(r => r.getString(fi) -> r.getString(di)).toMap
+    } else dataFiles(fs, s"$root/v$v").map(_._2 -> s"v$v").toMap
+
+  /** Y41 single-image change set between two published versions: `op`,
+    * the row identity, then the data columns — post-image for I/U. On a
+    * CDF root whose versions from+1 … to each committed a feed, it is
+    * READ from those feeds ([[committedChanges]]); otherwise it is
+    * derived from the data files ([[derivedChanges]]). */
   private[graft] def lakeChanges(s: SparkSession, root: String,
+      fromVersion: Int, toVersion: Int, key: String): CdfReport =
+    committedChanges(s, root, fromVersion, toVersion, key)
+      .getOrElse(derivedChanges(s, root, fromVersion, toVersion, key))
+
+  /** The committed change set of versions from+1 … to, when the feeds
+    * can stand in for the diff: the root has CDF on, every version in
+    * the range kept a readable `_changes`, and every feed row names its
+    * full row identity (parquet footers prove the identity columns
+    * null-free — a `T` reseed sentinel is all-null, so a reseed in the
+    * range falls back, as does a partition-less D). The rows come
+    * through the `graftlake-cdf` batch reader; a range of more than one
+    * version collapses latest-wins per identity (each version's feed
+    * holds at most one row per identity, so one version needs no
+    * shuffle). The feed is what the writers applied: D rows may carry
+    * only their identity, and a U may restate an unchanged row or name
+    * a key the source version lacked — MERGE/DELETE consumers converge
+    * on it as on the derived diff. `scannedTo` counts feed files; the
+    * totals are the two versions' file counts. None = use the derived
+    * diff. */
+  private[graft] def committedChanges(s: SparkSession, root: String,
+      fromVersion: Int, toVersion: Int, key: String): Option[CdfReport] = {
+    import org.apache.hadoop.fs.Path
+    val conf = s.sparkContext.hadoopConfiguration
+    val fs = new Path(root).getFileSystem(conf)
+    val versions = (fromVersion + 1) to toVersion
+    def feedDir(v: Int) = new Path(s"$root/v$v/_changes")
+    if (versions.isEmpty || !cdfEnabled(fs, root) ||
+        versions.exists(v => !fs.exists(feedDir(v)) ||
+          fs.exists(new Path(s"$root/v$v/_REAPED")))) return None
+    val files = versions.flatMap(v => fs.listStatus(feedDir(v)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.startsWith("part-")))
+    val schema = versionSchema(s, s"$root/v$toVersion")
+    val ids = partColOf(s, root, s"v$toVersion").toSeq :+ key
+    if (!FooterStats.nullFree(conf, files, ids)) return None
+    val feed = s.read.format("graftlake-cdf").option("path", root)
+      .option("startingVersion", fromVersion + 1)
+      .option("endingVersion", toVersion).load()
+    // the reader frames rows in the LIVE schema; a later evolution that
+    // changed one of the to-version's columns leaves the derived diff
+    if (!schema.fields.forall(f => feed.schema.fields.exists(g =>
+        g.name == f.name && g.dataType == f.dataType))) return None
+    val rows = feed.select(col("op") +: ids.map(col) ++:
+      schema.fieldNames.toSeq.filterNot(ids.contains).map(col) :+
+      col("_commit_version"): _*)
+    val net =
+      if (versions.size == 1) rows
+      else latestWins(rows, ids, col("_commit_version").desc)
+    Some(CdfReport(net.drop("_commit_version"), 0, files.size,
+      versionFiles(s, fs, root, fromVersion).size,
+      versionFiles(s, fs, root, toVersion).size, ids))
+  }
+
+  /** The single-image projection of [[lakeChangesImages]] — the change
+    * set derived from the data files, whatever the root's feeds hold. */
+  private[graft] def derivedChanges(s: SparkSession, root: String,
       fromVersion: Int, toVersion: Int, key: String): CdfReport = {
     val rep = lakeChangesImages(s, root, fromVersion, toVersion, key)
     val dataCols = rep.changes.columns.toSeq
@@ -1889,21 +2019,24 @@ object Sync {
     val staging = new Path(s"$root/_staging_v$toVersion")
     fs.delete(staging, true)
     fs.mkdirs(staging)
-    if (fs.exists(new Path(s"$fromDir/_file_stats"))) {
-      // zero-copy: every data file carries as a manifest reference —
-      // the normalized rewrite (not a sidecar copy) so legacy
-      // dir-less rows pin the dir they actually live in
-      val m = manifestDf(s, root, s"v$fromVersion")
-      m.select(manifestCols(m.columns.contains("part")).map(col): _*)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$staging/_file_stats")
-    } else // manifest-less version: the legacy physical carry
-      fs.listStatus(new Path(fromDir)).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .foreach { st =>
-          FileUtil.copy(fs, st.getPath,
-            fs, new Path(s"$staging/${st.getPath.getName}"), false, conf)
-        }
+    // (carried manifest, manifest as written) when the version has one
+    val manifests =
+      if (fs.exists(new Path(s"$fromDir/_file_stats"))) {
+        // zero-copy: every data file carries as a manifest reference —
+        // the normalized rewrite (not a sidecar copy) so legacy
+        // dir-less rows pin the dir they actually live in
+        val m = manifestLocal(s, root, s"v$fromVersion")
+        val (schemaN, rows) = manifestProjected(m)
+        Some((m, writeManifest(s, staging.toString, schemaN, rows)))
+      } else { // manifest-less version: the legacy physical carry
+        fs.listStatus(new Path(fromDir)).toSeq
+          .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+          .foreach { st =>
+            FileUtil.copy(fs, st.getPath,
+              fs, new Path(s"$staging/${st.getPath.getName}"), false, conf)
+          }
+        None
+      }
     carrySidecar(s, fromDir, staging.toString, "_deletes")
     writeSchemaSidecar(s, staging.toString,
       org.apache.spark.sql.types.StructType(base.fields ++ addCols))
@@ -1913,7 +2046,10 @@ object Sync {
       stageEmptyChanges(s, staging.toString,
         org.apache.spark.sql.types.StructType(base.fields ++ addCols),
         toVersion)
-    publishStagedDir(s, root, toVersion, _.head(1).nonEmpty)
+    publishStagedDir(s, root, toVersion,
+      manifests.fold[(=> DataFrame) => Boolean](_.head(1).nonEmpty)(m =>
+        manifestValidate(0L, m._1)),
+      manifests.map(_._2))
   }
 
   /** Y47: SQL DML INGEST under the publish protocol — the write half of
@@ -1957,6 +2093,9 @@ object Sync {
     val aligned = df.select(logical.fieldNames.toIndexedSeq.map(col): _*)
     val staging = new Path(s"$root/_staging_v${cur + 1}")
     fs.delete(staging, true)
+    // (new rows, carried manifest, manifest as written) of a manifest
+    // carry — the metadata-answered gate and the cache seed
+    val carried: Option[(Long, LocalManifest, LocalManifest)] =
     if (overwrite) {
       // full snapshot: fresh manifest, no DV (all content re-asserted)
       aligned.repartitionByRange(math.max(writeFiles, 1), col(key))
@@ -1964,6 +2103,7 @@ object Sync {
         .write.mode("overwrite").parquet(staging.toString)
       writeFileStats(s, staging.toString, key)
       carrySidecar(s, fromDir, staging.toString, "_schema")
+      None
     } else {
       // DV COLLISION FOLD: a key the increment asserts while the old
       // deletion vector still masks a physical ghost cannot ride the
@@ -2018,14 +2158,15 @@ object Sync {
         .repartitionByRange(math.max(writeFiles, 1), col(key))
         .sortWithinPartitions(key)
         .write.mode("overwrite").parquet(staging.toString)
-      oldStats match {
+      val manifests = oldStats match {
         case Some(st) =>
           // zero-copy frontier: every untouched old file rides as a
           // manifest reference — append cost ∝ |increment| in BYTES
           // now, not just in rewrites
           val affSet = affected.toSet
-          writeStagedManifest(s, root, cur + 1, key,
-            st.filterFiles(!affSet(_)).df(s))
+          val kept = st.filterFiles(!affSet(_))
+          val (n, staged) = writeStagedManifest(s, root, cur + 1, key, kept)
+          Some((n, kept, staged))
         case None =>
           // manifest-less source: physically carry (legacy), then
           // mint a fresh manifest over the whole staged dir
@@ -2035,6 +2176,7 @@ object Sync {
                 fs, new Path(s"$staging/$f"), false, conf)
           }
           writeFileStats(s, staging.toString, key)
+          None
       }
       if (hasDv) {
         // folded keys leave the DV (their ghosts are physically gone);
@@ -2052,10 +2194,14 @@ object Sync {
         stageChanges(s, staging.toString, logical,
           aligned.withColumn("op", lit("I")), cur + 1)
       carrySidecar(s, fromDir, staging.toString, "_schema")
+      manifests
     }
     // (overwrite stages no feed here: the publishStagedDir hook emits
     // the T reseed sentinel + the snapshot as I)
-    publishStagedDir(s, root, cur + 1, _.head(1).nonEmpty)
+    publishStagedDir(s, root, cur + 1,
+      carried.fold[(=> DataFrame) => Boolean](_.head(1).nonEmpty) {
+        case (n, kept, _) => manifestValidate(n, kept) },
+      carried.map(_._3))
   }
 
   /** Y44: MULTI-TABLE ATOMIC PUBLISH — the cross-table transaction

@@ -16,6 +16,17 @@ import graft.sources.JdbcSync.{JdbcConfig, ReadPartitioning}
   * of the source (S4) full-outer-joined against the lake's live
   * version on the key — the y3 idiom — classifying I/U/D, then applied
   * through the churn-pruned cow path (y38) as a new published version.
+  * The diff is derived ONCE per tick:
+  *
+  *  - capture turns CDF on for its root (`Sync.enableCdf`), so the
+  *    bootstrap commits v1's `I` feed and every incremental version
+  *    commits the applied batch as its `_changes` feed — which
+  *    [[LakeToJdbc.catchUp]] then ships instead of re-diffing the lake;
+  *  - the diff is PINNED by one eager local checkpoint ([[pin]]): the
+  *    op counts and the noop decision come from that same pass, and the
+  *    writer, the rewrite and the feed all read the checkpoint, so no
+  *    recomputation can reach back to a source that moved meanwhile.
+  *
   * Three honesty notes, each a real sync-tool trade:
   *
   *  - **The scan is the price of a generic source.** Server-side
@@ -83,6 +94,10 @@ object JdbcToLake {
       key: String, lakeName: String => String = _.toLowerCase,
       jdbcName: String => String = _.toUpperCase,
       readers: Int = 8): CaptureReport = {
+    val fs = new org.apache.hadoop.fs.Path(lakeRoot)
+      .getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!graft.ops.Sync.cdfEnabled(fs, lakeRoot))
+      graft.ops.Sync.enableCdf(s, lakeRoot)
     val snap = sourceSnapshot(s, cfg, key, lakeName, jdbcName, readers)
     if (!graft.ops.Sync.hasPublished(s, lakeRoot)) {
       require(graft.ops.Sync.publish(s,
@@ -103,50 +118,79 @@ object JdbcToLake {
     } else {
       val (vname, live) = graft.ops.Sync.readPublishedMor(s, lakeRoot, key)
       val v = vname.stripPrefix("v").toInt
-      val dataCols = live.columns.toSeq.filterNot(_ == key)
-      val l = live.select(col(key) +: lit(true).as("__l") +:
-        dataCols.map(c => col(c).as(s"pre_$c")): _*)
-      val r = snap.select(col(key) +: lit(true).as("__r") +:
-        dataCols.map(c => col(c).as(s"post_$c")): _*)
-      val differs = dataCols.map(c =>
-        !(col(s"pre_$c") <=> col(s"post_$c"))).reduce(_ || _)
       // the snapshot-diff is the tick's one O(churn+table) join; it
-      // feeds the emptiness decision, the op counts AND the cow apply —
-      // pre-r14 each consumer re-ran it (two more source pulls over the
-      // wire per tick). Persist the churn-sized result; ONE groupBy
-      // action materializes it and answers the noop decision (the old
-      // separate isEmpty probe was a fourth evaluation).
-      val batch = l.join(r, Seq(key), "full_outer")
-        .withColumn("op",
-          when(col("__l").isNull, lit("I"))
-            .when(col("__r").isNull, lit("D"))
-            .when(differs, lit("U")))
-        .filter(col("op").isNotNull)
-        .select(col("op") +: col(key) +: dataCols.map(c =>
-          // post-image for I/U; a D row only contributes its key to
-          // the cow prune, its carried values are never read back
-          when(col("op") === "D", col(s"pre_$c"))
-            .otherwise(col(s"post_$c")).as(c)): _*)
-        .withColumn("version", lit(v.toLong))
-        .persist()
+      // feeds the emptiness decision, the op counts, the cow apply and
+      // the committed feed — pinned once (see [[pin]])
+      val pinned = pin(snapshotDiff(live, snap, key, v))
       try {
-        val obs = batch.groupBy("op").count().collect()
-          .map(row => row.getString(0) -> row.getLong(1)).toMap
-        if (obs.isEmpty)
+        val obs = pinned.counts
+        if (obs.values.sum == 0L)
           CaptureReport("noop", v, 0, 0, 0, validated = true)
         else {
           require(graft.ops.Sync.cowApplyChanges(s, lakeRoot, v, v + 1,
-            key, batch).published,
+            key, pinned.batch).published,
             s"capture: cow publish v$v→v${v + 1} refused")
           val (_, newLive) = graft.ops.Sync.readPublishedMor(s, lakeRoot, key)
           val ok = validateAgainstSource(s, newLive, key, cfg, lakeName,
             jdbcName, readers)
           require(ok, s"capture: v${v + 1} left drift vs the source")
-          CaptureReport("incremental", v + 1, obs.getOrElse("I", 0L),
-            obs.getOrElse("U", 0L), obs.getOrElse("D", 0L), ok)
+          CaptureReport("incremental", v + 1, obs("I"), obs("U"),
+            obs("D"), ok)
         }
-      } finally batch.unpersist(blocking = false)
+      } finally pinned.release()
     }
+  }
+
+  /** The keyed full-outer diff of the live lake version `v` against the
+    * source snapshot: one I/U/D row per changed key (post-image for
+    * I/U, pre-image for D), stamped with `v` for the writer's
+    * latest-wins collapse. */
+  private[graft] def snapshotDiff(live: DataFrame, snap: DataFrame,
+      key: String, v: Int): DataFrame = {
+    val dataCols = live.columns.toSeq.filterNot(_ == key)
+    val l = live.select(col(key) +: lit(true).as("__l") +:
+      dataCols.map(c => col(c).as(s"pre_$c")): _*)
+    val r = snap.select(col(key) +: lit(true).as("__r") +:
+      dataCols.map(c => col(c).as(s"post_$c")): _*)
+    val differs = dataCols.map(c =>
+      !(col(s"pre_$c") <=> col(s"post_$c"))).reduce(_ || _)
+    l.join(r, Seq(key), "full_outer")
+      .withColumn("op",
+        when(col("__l").isNull, lit("I"))
+          .when(col("__r").isNull, lit("D"))
+          .when(differs, lit("U")))
+      .filter(col("op").isNotNull)
+      .select(col("op") +: col(key) +: dataCols.map(c =>
+        when(col("op") === "D", col(s"pre_$c"))
+          .otherwise(col(s"post_$c")).as(c)): _*)
+      .withColumn("version", lit(v.toLong))
+  }
+
+  /** A capture diff pinned for the tick: `batch` reads an eager local
+    * checkpoint, `counts` are its I/U/D counts observed on the pass
+    * that wrote the checkpoint. */
+  private[graft] final case class PinnedDiff(batch: DataFrame,
+      counts: Map[String, Long]) {
+    /** Drop the checkpoint's blocks. */
+    def release(): Unit = batch.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+  }
+
+  /** Pin a diff with ONE eager local checkpoint: the op counts and the
+    * noop decision come from the same pass (`observe`), and everything
+    * downstream — the writer's latest-wins batch, the rewrite, the
+    * committed feed — reads the checkpoint, so a recomputation can
+    * never reach back to the live JDBC source and see it moved. */
+  private[graft] def pin(diff: DataFrame): PinnedDiff = {
+    val obs = org.apache.spark.sql.Observation()
+    def n(op: String) = count(when(col("op") === op, 1)).as(op)
+    val batch = diff.observe(obs, n("I"), n("U"), n("D"))
+      .localCheckpoint(eager = true)
+    PinnedDiff(batch,
+      obs.get.map { case (op, n) => op -> n.asInstanceOf[Long] })
   }
 
   private def validateAgainstSource(s: SparkSession, live: DataFrame,

@@ -10,20 +10,25 @@ import graft.sources.JdbcSync.{JdbcConfig, withConn}
   * is incremental table synchronization into an MS-SQL-shaped target
   * ([INFERRED] SURVEY §3.1); here that job runs end-to-end ON THE
   * ENGINE'S OWN TRANSACTIONAL STORAGE: the published lake (y36–y46) is
-  * the source of record, the y41 change-data-feed is the delta
-  * extractor, and the dialected MERGE/DELETE writers are the apply
-  * path.
+  * the source of record, the change feed each version committed
+  * (`_changes`, y55) is the delta extractor, and the dialected
+  * MERGE/DELETE writers are the apply path.
   *
   *   lake v_from ──(already synced)──► JDBC target
-  *   lake v_to   ──[[graft.ops.Sync.lakeChanges]]──► CDF (I/U/D, net)
-  *          CDF ──[[JdbcSync.applyChangeFeed]]──► MERGE/DELETE batches
+  *   lake v_to   ──[[graft.ops.Sync.lakeChanges]]──► I/U/D change set
+  *   change set  ──[[JdbcSync.applyChangeFeed]]──► MERGE/DELETE batches
   *       target ──[[SyncJob.validate]] vs lake v_to ──► drift == 0
   *
   * Why this shape survives 100 TB:
-  *  - the DELTA, not the table, crosses the wire: y41 diffs only files
-  *    that changed between the versions (manifest-pruned — a self-diff
-  *    scans ZERO files), so cost ∝ churn. A nightly 0.1 % churn on a
-  *    100 TB table ships ~100 GB of MERGEs, not 100 TB of reloads;
+  *  - the DELTA, not the table, crosses the wire. On a CDF root the
+  *    change set is READ from the feeds of v_from+1 … v_to (collapsed
+  *    latest-wins on a multi-version jump) — the writers already
+  *    derived it once, at commit. Where a feed is missing, a version in
+  *    the range reseeded (`T`), or the root has no CDF, the y41 diff
+  *    derives it instead, over only the files that changed between the
+  *    versions (manifest-pruned — a self-diff scans ZERO files). Either
+  *    way cost ∝ churn: a nightly 0.1 % churn on a 100 TB table ships
+  *    ~100 GB of MERGEs, not 100 TB of reloads;
   *  - the apply is retry-idempotent (MERGE on key; DELETE of an absent
   *    key is a no-op), so task retries and whole-feed replays land on
   *    the same state — exactly-once without target-side transactions
@@ -95,13 +100,15 @@ object LakeToJdbc {
   }
 
   /** `SELECT COUNT(*)` straight over JDBC — one row on the wire. */
-  private def countWhere(cfg: JdbcConfig, where: Option[String]): Long =
-    withConn(cfg) { conn =>
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT COUNT(*) FROM ${cfg.table}" +
-          where.fold("")(w => s" WHERE $w"))
+  private def countWhere(conn: java.sql.Connection, table: String,
+      where: Option[String]): Long = {
+    val st = conn.createStatement()
+    try {
+      val rs = st.executeQuery(s"SELECT COUNT(*) FROM $table" +
+        where.fold("")(w => s" WHERE $w"))
       try { rs.next(); rs.getLong(1) } finally rs.close()
-    }
+    } finally st.close()
+  }
 
   /** The target read a FULL validation uses: range-partitioned on the
     * key when it is integral (bounds from the LAKE side — the source
@@ -138,7 +145,8 @@ object LakeToJdbc {
       dialect: MergeSql.Dialect = MergeSql.Derby,
       targetWhere: Option[String] = None,
       targetCols: Option[Seq[String]] = None,
-      lakeCount: Option[Long] = None): (Boolean, String) = {
+      lakeCount: Option[Long] = None,
+      conn: Option[java.sql.Connection] = None): (Boolean, String) = {
     val keyUp = jdbcName(key)
     val compareCols = lake.columns.toSeq.filterNot(_ == key)
     val selList = targetCols.fold("*")(_.mkString(", "))
@@ -162,7 +170,9 @@ object LakeToJdbc {
       case Validation.Sampled(buckets, _, _) =>
         val bucket = java.lang.Math.floorMod(toVersion, buckets)
         val pred = MergeSql.modPredicate(dialect, keyUp, buckets, bucket)
-        val nTarget = countWhere(cfg, targetWhere)
+        // on the caller's connection when it shares one (catch-up)
+        def n(c: java.sql.Connection) = countWhere(c, cfg.table, targetWhere)
+        val nTarget = conn.fold(withConn(cfg)(n))(n)
         // the lake-side COUNT comes from the version MANIFEST when the
         // caller could prove it exact (clean version) — zero data IO;
         // a full scan of the lake side per tick was the r12 gap
@@ -212,13 +222,10 @@ object LakeToJdbc {
     val tVer = batch.filter(col("op") === "T")
       .agg(max(col("_commit_version"))).collect()(0)
     val cut = if (tVer.isNullAt(0)) None else Some(tVer.getLong(0))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(key).orderBy(col("_commit_version").desc)
-    (cut, batch
+    (cut, graft.ops.Sync.latestWins(batch
       .filter(col("op") =!= "T" &&
-        col("_commit_version") >= cut.getOrElse(Long.MinValue))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn"))
+        col("_commit_version") >= cut.getOrElse(Long.MinValue)),
+      Seq(key), col("_commit_version").desc))
   }
 
   /** A lake frame under target names: `op` stays, every other column
@@ -324,7 +331,16 @@ object LakeToJdbc {
       jdbcName: String => String = _.toUpperCase,
       dialect: MergeSql.Dialect = MergeSql.Derby,
       writers: Int = 1,
-      validation: Validation = Validation.Sampled()): LakeSyncReport = {
+      validation: Validation = Validation.Sampled()): LakeSyncReport =
+    incremental(s, lakeRoot, fromVersion, toVersion, key, cfg, jdbcName,
+      dialect, writers, validation, None)
+
+  /** [[incrementalSync]] with its count probe on `conn` when given. */
+  private def incremental(s: SparkSession, lakeRoot: String,
+      fromVersion: Int, toVersion: Int, key: String, cfg: JdbcConfig,
+      jdbcName: String => String, dialect: MergeSql.Dialect,
+      writers: Int, validation: Validation,
+      conn: Option[java.sql.Connection]): LakeSyncReport = {
     val cdf = graft.ops.Sync.lakeChanges(s, lakeRoot, fromVersion,
       toVersion, key)
     // one churn-sized pass: per-op counts via observe on the SAME scan
@@ -346,7 +362,8 @@ object LakeToJdbc {
       s"$lakeRoot/v$toVersion", key)
     val (ok, vmode) = validateTarget(s, lake, key, cfg, toVersion,
       validation, jdbcName, dialect,
-      lakeCount = graft.ops.Sync.manifestRowCount(s, lakeRoot, toVersion))
+      lakeCount = graft.ops.Sync.manifestRowCount(s, lakeRoot, toVersion),
+      conn = conn)
     LakeSyncReport(fromVersion, toVersion,
       m("nI").asInstanceOf[Long], m("nU").asInstanceOf[Long],
       m("nD").asInstanceOf[Long],
@@ -357,12 +374,16 @@ object LakeToJdbc {
   /** Y50: one scheduled catch-up's certificate. `mode` names the path
     * taken: `noop` (target already at the live version — zero JDBC
     * traffic beyond the watermark read), `incremental` (ONE CDF jump
-    * watermark → live; intermediate versions net out in the diff, so a
-    * job that slept through ten publishes pays one churn-sized step,
-    * not ten), or `reseed` (no watermark yet, the watermark's version
-    * dir no longer exists — retention GC outran the cadence, y21's
-    * condition — or the lake was rolled back below the watermark:
-    * truncate + bulk reload + revalidate). */
+    * watermark → live; intermediate versions net out, so a job that
+    * slept through ten publishes pays one churn-sized step, not ten),
+    * or `reseed` (no watermark yet, the watermark's version dir no
+    * longer exists — retention GC outran the cadence, y21's condition —
+    * or the lake was rolled back below the watermark: truncate + bulk
+    * reload + revalidate). The op counts are the change set shipped: on
+    * a jump read from committed feeds they count the feed collapsed
+    * latest-wins per row identity, so a key inserted and then updated
+    * inside the jump counts as one U where the derived diff says I. The
+    * MERGE/DELETE apply lands on the same target either way. */
   final case class CatchUpReport(
       mode: String, fromVersion: Int, toVersion: Int,
       nInsert: Long, nUpdate: Long, nDelete: Long,
@@ -448,62 +469,66 @@ object LakeToJdbc {
       jdbcName: String => String = _.toUpperCase,
       dialect: MergeSql.Dialect = MergeSql.Derby,
       writers: Int = 1,
-      validation: Validation = Validation.Sampled()): CatchUpReport = {
-    val (vname, live) = graft.ops.Sync.readPublishedMor(s, lakeRoot, key)
-    val liveV = vname.stripPrefix("v").toInt
-    val w = readWatermark(cfg, stateTable)
-    val fromDir = new org.apache.hadoop.fs.Path(
-      s"$lakeRoot/v${w.getOrElse(-1)}")
-    val fs = fromDir.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // zero-copy retention GC leaves a THINNED husk (files newer
-    // manifests reference stay, a _REAPED marker refuses reads) — a
-    // reaped watermark is retention loss exactly like a deleted dir
-    def fromReadable: Boolean = fs.exists(fromDir) &&
-      !fs.exists(new org.apache.hadoop.fs.Path(fromDir, "_REAPED"))
-    // Y51: schema first, data second — the ALTERs must land before the
-    // feed binds against the new columns (and before a reseed INSERTs
-    // the wider rows). When nothing drifted the plan is empty and this
-    // is one metadata probe. Runs on every tick, noop included: a
-    // schema-only publish (y43 with no follow-up cow) still reaches
-    // the target on the next tick even though no CDF rows flow.
-    val (nAdd, nDrop) = reconcileTargetSchema(s, live.schema, key, cfg,
-      jdbcName, dialect)
-    w match {
-      case Some(wv) if wv == liveV =>
-        CatchUpReport("noop", wv, liveV, 0, 0, 0, 0, 0, validated = true,
-          nAddCols = nAdd, nDropCols = nDrop, validation = "noop")
-      case Some(wv) if wv < liveV && fromReadable =>
-        val rep = incrementalSync(s, lakeRoot, wv, liveV, key, cfg,
-          jdbcName, dialect, writers, validation)
-        require(rep.validated,
-          s"catchUp: incremental step $wv→$liveV left drift: $rep")
-        writeWatermark(cfg, stateTable, liveV, dialect)
-        CatchUpReport("incremental", wv, liveV, rep.nInsert,
-          rep.nUpdate, rep.nDelete, rep.scannedFiles, rep.totalFiles,
-          rep.validated, nAddCols = nAdd, nDropCols = nDrop,
-          validation = rep.validation)
-      case _ =>
-        // first run, watermark dir reaped, or lake rolled back below
-        // the watermark — rebuild from the live snapshot. The reseed
-        // just shipped the WHOLE table, so a full validation is
-        // churn-proportional here by definition — always Full, with
-        // the range-partitioned parallel pull.
-        execDdl(cfg, s"TRUNCATE TABLE ${cfg.table}")
-        val n = seed(s, lakeRoot, liveV, key, cfg, jdbcName, dialect,
-          writers, bulk = true)
-        val fullReaders = validation match {
-          case Validation.Full(r) => r
-          case Validation.Sampled(_, _, r) => r
-        }
-        val (ok, vmode) = validateTarget(s, live, key, cfg, liveV,
-          Validation.Full(fullReaders), jdbcName, dialect)
-        require(ok, s"catchUp: reseed of v$liveV left drift")
-        writeWatermark(cfg, stateTable, liveV, dialect)
-        CatchUpReport("reseed", w.getOrElse(-1), liveV, n, 0, 0,
-          0, 0, ok, nAddCols = nAdd, nDropCols = nDrop,
-          validation = vmode)
+      validation: Validation = Validation.Sampled()): CatchUpReport =
+    // the watermark read and write, the count probe and the reseed's
+    // TRUNCATE share one connection; Spark's JDBC scans and writers
+    // open their own
+    withConn(cfg) { conn =>
+      val (vname, live) = graft.ops.Sync.readPublishedMor(s, lakeRoot, key)
+      val liveV = vname.stripPrefix("v").toInt
+      val w = readWatermark(conn, cfg.table, stateTable)
+      val fromDir = new org.apache.hadoop.fs.Path(
+        s"$lakeRoot/v${w.getOrElse(-1)}")
+      val fs = fromDir.getFileSystem(s.sparkContext.hadoopConfiguration)
+      // zero-copy retention GC leaves a THINNED husk (files newer
+      // manifests reference stay, a _REAPED marker refuses reads) — a
+      // reaped watermark is retention loss exactly like a deleted dir
+      def fromReadable: Boolean = fs.exists(fromDir) &&
+        !fs.exists(new org.apache.hadoop.fs.Path(fromDir, "_REAPED"))
+      // Y51: schema first, data second — the ALTERs must land before the
+      // feed binds against the new columns (and before a reseed INSERTs
+      // the wider rows). When nothing drifted the plan is empty and this
+      // is one metadata probe. Runs on every tick, noop included: a
+      // schema-only publish (y43 with no follow-up cow) still reaches
+      // the target on the next tick even though no CDF rows flow.
+      val (nAdd, nDrop) = reconcileTargetSchema(s, live.schema, key, cfg,
+        jdbcName, dialect)
+      w match {
+        case Some(wv) if wv == liveV =>
+          CatchUpReport("noop", wv, liveV, 0, 0, 0, 0, 0, validated = true,
+            nAddCols = nAdd, nDropCols = nDrop, validation = "noop")
+        case Some(wv) if wv < liveV && fromReadable =>
+          val rep = incremental(s, lakeRoot, wv, liveV, key, cfg,
+            jdbcName, dialect, writers, validation, Some(conn))
+          require(rep.validated,
+            s"catchUp: incremental step $wv→$liveV left drift: $rep")
+          writeWatermark(conn, cfg.table, stateTable, liveV, dialect)
+          CatchUpReport("incremental", wv, liveV, rep.nInsert,
+            rep.nUpdate, rep.nDelete, rep.scannedFiles, rep.totalFiles,
+            rep.validated, nAddCols = nAdd, nDropCols = nDrop,
+            validation = rep.validation)
+        case _ =>
+          // first run, watermark dir reaped, or lake rolled back below
+          // the watermark — rebuild from the live snapshot. The reseed
+          // just shipped the WHOLE table, so a full validation is
+          // churn-proportional here by definition — always Full, with
+          // the range-partitioned parallel pull.
+          exec(conn, s"TRUNCATE TABLE ${cfg.table}")
+          val n = seed(s, lakeRoot, liveV, key, cfg, jdbcName, dialect,
+            writers, bulk = true)
+          val fullReaders = validation match {
+            case Validation.Full(r) => r
+            case Validation.Sampled(_, _, r) => r
+          }
+          val (ok, vmode) = validateTarget(s, live, key, cfg, liveV,
+            Validation.Full(fullReaders), jdbcName, dialect)
+          require(ok, s"catchUp: reseed of v$liveV left drift")
+          writeWatermark(conn, cfg.table, stateTable, liveV, dialect)
+          CatchUpReport("reseed", w.getOrElse(-1), liveV, n, 0, 0,
+            0, 0, ok, nAddCols = nAdd, nDropCols = nDrop,
+            validation = vmode)
+      }
     }
-  }
 
   /** One member of a synced group: the lake table name under the group
     * root, its PK column, and its JDBC target. */
@@ -557,7 +582,7 @@ object LakeToJdbc {
       .getFileSystem(s.sparkContext.hadoopConfiguration)
     val state = members.map { m =>
       val liveV = group(m.table)._1
-      val w = readWatermark(m.cfg, stateTable)
+      val w = withConn(m.cfg)(readWatermark(_, m.cfg.table, stateTable))
       val reseed = w.isEmpty || w.exists(_ > liveV) ||
         w.exists(wv => !fs.exists(new org.apache.hadoop.fs.Path(
           s"$root/${m.table}/v$wv")) ||
@@ -583,7 +608,8 @@ object LakeToJdbc {
         val (ok, vmode) = validateTarget(s, live, m.key, m.cfg, liveV,
           Validation.Full(), jdbcName, dialect)
         require(ok, s"catchUpGroup: reseed of ${m.table} left drift")
-        writeWatermark(m.cfg, stateTable, liveV, dialect)
+        withConn(m.cfg)(writeWatermark(_, m.cfg.table, stateTable, liveV,
+          dialect))
         m.table -> CatchUpReport("reseed", w.getOrElse(-1), liveV,
           n, 0, 0, 0, 0, ok, validation = vmode)
       }
@@ -661,7 +687,8 @@ object LakeToJdbc {
       // watermarks advance only after EVERY member validated
       applied.foreach { case (t, rep) =>
         val m = members.find(_.table == t).get
-        writeWatermark(m.cfg, stateTable, rep.toVersion, dialect)
+        withConn(m.cfg)(writeWatermark(_, m.cfg.table, stateTable,
+          rep.toVersion, dialect))
       }
       val noops = state.filter { case (_, w, liveV, _) =>
         w.contains(liveV) }.map { case (m, _, liveV, _) =>
@@ -676,58 +703,59 @@ object LakeToJdbc {
     * keyed by the TARGET table's name so one state table serves every
     * synced table in the database. Missing state table or row = never
     * synced. */
-  private def readWatermark(cfg: JdbcConfig,
+  private def readWatermark(conn: java.sql.Connection, table: String,
       stateTable: String): Option[Int] = {
     require(stateTable.matches(
       "[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)?"),
       s"readWatermark: invalid state table identifier '$stateTable'")
-    withConn(cfg) { conn =>
+    try {
+      val ps = conn.prepareStatement(
+        s"SELECT SYNCED_VERSION FROM $stateTable WHERE TBL = ?")
       try {
-        val ps = conn.prepareStatement(
-          s"SELECT SYNCED_VERSION FROM $stateTable WHERE TBL = ?")
-        try {
-          ps.setString(1, cfg.table)
-          val rs = ps.executeQuery()
-          try { if (rs.next()) Some(rs.getInt(1)) else None }
-          finally rs.close()
-        } finally ps.close()
-      } catch {
-        case e: java.sql.SQLException
-            if e.getSQLState == "42X05" ||  // Derby: table not found
-              Option(e.getMessage).exists(_.toLowerCase
-                .contains("does not exist")) =>
-          None
-      }
+        ps.setString(1, table)
+        val rs = ps.executeQuery()
+        try { if (rs.next()) Some(rs.getInt(1)) else None }
+        finally rs.close()
+      } finally ps.close()
+    } catch {
+      case e: java.sql.SQLException
+          if e.getSQLState == "42X05" ||  // Derby: table not found
+            Option(e.getMessage).exists(_.toLowerCase
+              .contains("does not exist")) =>
+        None
     }
   }
 
-  private def writeWatermark(cfg: JdbcConfig, stateTable: String,
-      version: Int, dialect: MergeSql.Dialect): Unit = {
-    withConn(cfg) { conn =>
-      try conn.createStatement().execute(
-        s"CREATE TABLE $stateTable (TBL VARCHAR(128) NOT NULL " +
-          "PRIMARY KEY, SYNCED_VERSION BIGINT)")
-      catch {
-        case e: java.sql.SQLException
-            if e.getSQLState == "X0Y32" ||
-              Option(e.getMessage).exists(_.contains("already exists")) =>
-          ()
-      }
-      val up = MergeSql.upsert(dialect, stateTable, "TBL",
-        Seq("SYNCED_VERSION"))
-      val ps = conn.prepareStatement(up.sql)
-      try {
-        up.bindOrder.zipWithIndex.foreach { case (c, pos) =>
-          if (c == "TBL") ps.setString(pos + 1, cfg.table)
-          else ps.setLong(pos + 1, version.toLong)
-        }
-        ps.executeUpdate()
-      } finally ps.close()
+  private def writeWatermark(conn: java.sql.Connection, table: String,
+      stateTable: String, version: Int, dialect: MergeSql.Dialect): Unit = {
+    try exec(conn,
+      s"CREATE TABLE $stateTable (TBL VARCHAR(128) NOT NULL " +
+        "PRIMARY KEY, SYNCED_VERSION BIGINT)")
+    catch {
+      case e: java.sql.SQLException
+          if e.getSQLState == "X0Y32" ||
+            Option(e.getMessage).exists(_.contains("already exists")) =>
+        ()
     }
+    val up = MergeSql.upsert(dialect, stateTable, "TBL",
+      Seq("SYNCED_VERSION"))
+    val ps = conn.prepareStatement(up.sql)
+    try {
+      up.bindOrder.zipWithIndex.foreach { case (c, pos) =>
+        if (c == "TBL") ps.setString(pos + 1, table)
+        else ps.setLong(pos + 1, version.toLong)
+      }
+      ps.executeUpdate()
+    } finally ps.close()
+  }
+
+  private def exec(conn: java.sql.Connection, sql: String): Unit = {
+    val st = conn.createStatement()
+    try st.execute(sql) finally st.close()
   }
 
   private def execDdl(cfg: JdbcConfig, sql: String): Unit =
-    withConn(cfg)(_.createStatement().execute(sql))
+    withConn(cfg)(exec(_, sql))
 
   /** Y48b: one incremental step into an SCD2 HISTORY target
     * ([[JdbcSync.applyScd2Feed]]) — the warehouse shape where the

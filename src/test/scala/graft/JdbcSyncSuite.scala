@@ -414,6 +414,76 @@ class JdbcSyncSuite extends AnyFunSuite with SparkFixture {
     assert(e2e, "round-trip source≡target digest failed")
   }
 
+  test("capture pinning law: the pinned diff reads no JDBC relation, and a tick — committed or refused — leaves no cached block behind") {
+    import graft.ops.Sync
+    import graft.sync.JdbcToLake
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cappin")
+      .toString + "/lake"
+    val sCfg = cfg.copy(table = "CAPTURE_PIN")
+    def loadSrc(rows: Seq[(Long, Double)]): Unit = {
+      writeTable(rows.toDF("k", "price").select(col("k").as("K"),
+        col("price").as("PRICE")), sCfg, SaveMode.Overwrite)
+      ensureKeyIndex(sCfg, Seq("K"))
+    }
+    def jdbcIn(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation.getClass.getSimpleName == "JDBCRelation"
+        case _ => false
+      }
+    def noCachedBlocks(what: String): Unit = {
+      assert(spark.sharedState.cacheManager.isEmpty,
+        s"$what left a frame in the CacheManager")
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+        s"$what left a persisted RDD behind")
+    }
+    loadSrc(Seq((1L, 10.0), (2L, 20.0), (3L, 30.0), (4L, 40.0)))
+    assert(JdbcToLake.capture(spark, sCfg, root, "k").mode == "bootstrap")
+    loadSrc(Seq((1L, 10.0), (2L, 22.0), (4L, 40.0), (9L, 90.0)))
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist())
+    // the diff capture builds reads the source; once pinned it does not
+    val snap = readTable(spark, sCfg, None)
+      .select(col("K").as("k"), col("PRICE").as("price"))
+    val diff = JdbcToLake.snapshotDiff(
+      Sync.readPublishedMor(spark, root, "k")._2, snap, "k", 1)
+    assert(jdbcIn(diff), "the unpinned diff should read the JDBC source")
+    val pinned = JdbcToLake.pin(diff)
+    try {
+      assert(!jdbcIn(pinned.batch),
+        "the pinned diff can still recompute from the live source")
+      assert(pinned.counts == Map("I" -> 1L, "U" -> 1L, "D" -> 1L),
+        s"${pinned.counts}")
+      assert(pinned.batch.select("op", "k").as[(String, Long)].collect()
+        .toSet == Set(("U", 2L), ("D", 3L), ("I", 9L)))
+    } finally pinned.release()
+    noCachedBlocks("a released pin")
+    // a committed tick
+    val t = JdbcToLake.capture(spark, sCfg, root, "k")
+    assert(t.mode == "incremental" && t.version == 2 && t.nInsert == 1 &&
+      t.nUpdate == 1 && t.nDelete == 1, s"$t")
+    noCachedBlocks("a committed capture tick")
+    // a refused tick: v3 already exists, so the publish is refused
+    loadSrc(Seq((1L, 11.0), (2L, 22.0), (9L, 90.0)))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/v3"))
+    val e = intercept[IllegalArgumentException] {
+      JdbcToLake.capture(spark, sCfg, root, "k")
+    }
+    assert(e.getMessage.contains("refused"), e.getMessage)
+    noCachedBlocks("a refused capture tick")
+    // the refusal changed nothing: once the stray dir is gone the same
+    // tick commits
+    fs.delete(new org.apache.hadoop.fs.Path(s"$root/v3"), true)
+    val t3 = JdbcToLake.capture(spark, sCfg, root, "k")
+    assert(t3.mode == "incremental" && t3.version == 3 &&
+      t3.nUpdate == 1 && t3.nDelete == 1, s"$t3")
+    noCachedBlocks("the replayed capture tick")
+  }
+
   test("Y52 law: group catch-up — FK-safe order, replay converges, all-or-nothing reseed, wrong order refuses") {
     import graft.ops.Sync
     import graft.sync.LakeToJdbc.GroupMember

@@ -175,6 +175,17 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
   }
 
   test("lake fuzz: a JDBC mirror catch-up follows interleaved lake histories — random-cadence ticks always converge, across MOR/compaction/evolution states") {
+    mirrorWalk(1 to 3, cdf = false)
+  }
+
+  test("lake fuzz: a mirror of a CDF root catches up through the committed feeds — multi-version jumps converge across DV/compaction/evolution, and a reseed in the range falls back to the derived diff") {
+    mirrorWalk(4 to 5, cdf = true)
+  }
+
+  /** The mirror walk: on a `cdf` root every jump without a reseed in its
+    * range must read the committed feeds, every other jump the derived
+    * diff. */
+  private def mirrorWalk(seeds: Seq[Int], cdf: Boolean): Unit = {
     // The y50 catch-up under GENERATED histories: every walk interleaves
     // cow CDC, MOR delete vectors, compaction, and evolution, and a
     // mirror tick fires at RANDOM CADENCE — so single jumps span
@@ -190,10 +201,13 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
     val b0 = proj0.agg(min(col("o_orderkey")), max(col("o_orderkey")))
       .collect()(0)
     val lo = b0.getLong(0); val hi = b0.getLong(1); val span = hi - lo
-    for (seed <- 1 to 3) {
+    var feedJumps = 0
+    var derivedJumps = 0
+    for (seed <- seeds) {
       val rnd = new scala.util.Random(5150L + seed)
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_mirfz$seed").toString + "/lake"
+      if (cdf) ops.Sync.enableCdf(spark, root)
       val db = java.nio.file.Files
         .createTempDirectory(s"graft_mirdb$seed").resolve("db")
       val cfg = graft.sources.JdbcSync.JdbcConfig(
@@ -212,9 +226,22 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
       var expected = proj0
       var evolved = false
       var step = 0
+      // CDF walk: the mirror's watermark, the versions that committed a
+      // T (reseed) feed, and how many jumps each path carried
+      var synced = 0
+      var reseeds = Set.empty[Int]
       def mirrorConverged(what: String): Unit = {
+        if (cdf && synced > 0 && synced < cur) {
+          val viaFeed = ops.Sync.committedChanges(spark, root, synced, cur,
+            "o_orderkey").isDefined
+          assert(viaFeed == !reseeds.exists(v => v > synced && v <= cur),
+            s"seed $seed step $step [$what]: jump v$synced→v$cur took " +
+              s"the wrong path (feed: $viaFeed, reseeds: $reseeds)")
+          if (viaFeed) feedJumps += 1 else derivedJumps += 1
+        }
         val r = graft.sync.LakeToJdbc.catchUp(spark, root,
           "o_orderkey", cfg)
+        synced = r.toVersion
         assert(r.validated, s"seed $seed step $step [$what]: $r")
         val back0 = graft.sources.JdbcSync.readTable(spark, cfg, None)
         val back = back0.select(back0.columns.toSeq
@@ -304,12 +331,23 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
             }
           case _ => ()
         }
+        // one snapshot republish of the logical state: its feed is a T
+        // sentinel plus I rows, so the jump across it is derived
+        if (cdf && step == 3) {
+          assert(ops.Sync.appendPublish(spark, root, "o_orderkey",
+            expected, overwrite = true))
+          cur += 1
+          reseeds += cur
+          mirrorConverged("republish-tick")
+        }
         // RANDOM CADENCE: the mirror sometimes sleeps through moves —
         // the next tick must absorb a multi-version, mixed-state jump
         if (rnd.nextBoolean()) mirrorConverged("tick")
       }
       mirrorConverged("final-tick")
     }
+    if (cdf) assert(feedJumps > 0 && derivedJumps > 0,
+      s"feed jumps $feedJumps, derived jumps $derivedJumps")
   }
 
   test("lake fuzz: interleaved cdc/MOR-delete/compact/evolve/GC move sequences hold the logical-state law and the CDF closure at every step") {
@@ -394,6 +432,23 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
             "replay the previous logical state to the new one")
         fd.unpersist()
       }
+      // fifth arm: on this CDF root lakeChanges READS the committed
+      // feeds; they must set-equal the change set derived from the
+      // files. A D row compares on its identity — the feed's D may
+      // carry the key alone
+      def checkFeedPath(prev: Int, what: String): Unit = {
+        val read = ops.Sync.committedChanges(spark, root, prev, cur,
+          "o_orderkey")
+        assert(read.isDefined,
+          s"seed $seed step $step [$what]: the feed path was not taken")
+        def norm(df: DataFrame): DataFrame = df.select(df.columns.map(c =>
+          if (c == "op" || c == "o_orderkey") col(c)
+          else when(col("op") =!= "D", col(c)).as(c)).toIndexedSeq: _*)
+        sameSet(norm(read.get.changes), norm(ops.Sync.derivedChanges(spark,
+            root, prev, cur, "o_orderkey").changes),
+          s"seed $seed step $step [$what]: the committed feed != the " +
+            "derived diff")
+      }
       for (_ <- 1 to 6) {
         step += 1
         rnd.nextInt(8) match {
@@ -435,6 +490,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
                 .unionByName(latest.filter(col("op") =!= "D").drop("op"))
               checkState("cdc")
               checkFeed(prev, "cdc")
+              checkFeedPath(prev, "cdc")
               // CDF closure against whatever MOR/evolution state holds
               val ch = ops.Sync.lakeChanges(spark, root, prev, cur,
                 "o_orderkey").changes.cache()
@@ -465,6 +521,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
               expected = expected.join(dv, Seq("o_orderkey"), "left_anti")
               checkState("mor")
               checkFeed(cur - 1, "mor")
+              checkFeedPath(cur - 1, "mor")
             }
           case 3 => // incremental compaction — pure layout, state fixed
             val bytes = fsRoot.listStatus(
@@ -478,6 +535,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
             cur += 1
             checkState("compact")
             checkFeed(cur - 1, "compact")
+            checkFeedPath(cur - 1, "compact")
           case 4 => // metadata-only evolution (once per walk)
             if (evolvedCol.isEmpty) {
               val name = s"x_evo$seed"
@@ -490,6 +548,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
                 lit(null).cast("double"))
               checkState("evolve")
               checkFeed(cur - 1, "evolve")
+              checkFeedPath(cur - 1, "evolve")
             }
           case 5 => // retention GC — current + window must stay whole
             val rep = ops.Sync.gcPublished(spark, root, keepPrevious = 2)
@@ -524,6 +583,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
               expected = expected.unionByName(inc)
               checkState("append")
               checkFeed(cur - 1, "append")
+              checkFeedPath(cur - 1, "append")
               inc.unpersist()
             }
           case 7 => // SQL row-level MERGE via the catalog (s21's
@@ -588,6 +648,7 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
                 .select(cols.map(col).toIndexedSeq: _*)
               checkState("sqlmerge")
               checkFeed(cur - 1, "sqlmerge")
+              checkFeedPath(cur - 1, "sqlmerge")
               src.unpersist()
             }
         }
@@ -599,5 +660,97 @@ class LakeFuzzSuite extends AnyFunSuite with SparkFixture {
       sameSet(mor, expected.select(mor.columns.map(col).toIndexedSeq: _*),
         s"seed $seed: final MOR view diverged")
     }
+  }
+
+  /** Job starts seen by a listener, as (job id, call site of its final
+    * stage) — the call site is the driver stack that submitted it. */
+  private def withJobs[T](body: => T): (T, Seq[(Int, String)]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((e.jobId, e.stageInfos.lastOption.fold("")(_.details)))
+    }
+    org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq.sortBy(_._1))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("commit-path law: every commit seeds the manifest cache with exactly what a cold read returns, and every writer's feed holds one row per identity") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_seed")
+      .toString + "/t"
+    ops.Sync.enableCdf(spark, root)
+    assert(ops.Sync.publish(spark, (1L to 40L).map(k => (k, k * 1.5))
+      .toDF("k", "x").repartitionByRange(4, col("k")), root, 1,
+      _.head(1).nonEmpty))
+    ops.Sync.writeFileStats(spark, s"$root/v1", "k")
+    def law(v: Int, what: String): Unit = {
+      val (seeded, jobs) = withJobs(ops.Sync.manifestLocal(spark, root,
+        s"v$v"))
+      assert(jobs.isEmpty, s"$what: the manifest read ran jobs $jobs")
+      val cold = spark.read.parquet(s"$root/v$v/_file_stats")
+      assert(seeded.schema == cold.schema,
+        s"$what: seeded schema ${seeded.schema} != cold ${cold.schema}")
+      assert(seeded.rows == cold.collect().toSeq,
+        s"$what: seeded rows differ from a cold read")
+      assert(seeded.rows.map(_.getAs[String]("file")) == seeded.files)
+      val fd = spark.read.parquet(s"$root/v$v/_changes")
+      assert(fd.groupBy("k").count().filter(col("count") > 1).isEmpty,
+        s"$what: the feed holds two rows for one identity")
+    }
+    law(1, "snapshot")
+    assert(ops.Sync.cowApplyChanges(spark, root, 1, 2, "k",
+      Seq((3L, 9.0, "U", 1L), (3L, 9.5, "U", 2L), (7L, 0.0, "D", 1L),
+        (99L, 1.0, "I", 1L)).toDF("k", "x", "op", "version")).published)
+    law(2, "cow apply")
+    assert(ops.Sync.dvDelete(spark, root, 2, 3, "k",
+      Seq(11L, 12L, 12L).toDF("k")).published)
+    law(3, "dvDelete")
+    assert(ops.Sync.compactPublished(spark, root, 3, 4, "k", 64L << 20)
+      .published)
+    law(4, "compaction")
+    assert(ops.Sync.evolveSchema(spark, root, 4, 5,
+      Seq(org.apache.spark.sql.types.StructField("y",
+        org.apache.spark.sql.types.StringType))))
+    law(5, "evolution")
+    assert(ops.Sync.appendPublish(spark, root, "k",
+      Seq((12L, 2.0, "a"), (100L, 3.0, "b")).toDF("k", "x", "y"),
+      overwrite = false))
+    law(6, "append")
+    assert(ops.Sync.mergeInto(spark, root, 6, 7, "k",
+      Seq((4L, 4.5, "m"), (101L, 5.0, "n")).toDF("k", "x", "y"),
+      None, None, None, None).published)
+    law(7, "merge")
+  }
+
+  test("commit-path law: a cow publish with complete row counts runs no Spark job after its manifest write, and its own readers run none") {
+    val spark0 = spark
+    import spark0.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_nojob")
+      .toString + "/t"
+    assert(ops.Sync.publish(spark, (1L to 40L).map(k => (k, k * 1.5))
+      .toDF("k", "x").repartitionByRange(4, col("k")), root, 1,
+      _.head(1).nonEmpty))
+    ops.Sync.writeFileStats(spark, s"$root/v1", "k")
+    val (rep, jobs) = withJobs(ops.Sync.cowApplyChanges(spark, root, 1, 2,
+      "k", Seq((3L, 9.0, "U", 1L), (50L, 1.0, "I", 1L))
+        .toDF("k", "x", "op", "version")))
+    assert(rep.published, s"$rep")
+    assert(jobs.nonEmpty && jobs.last._2.contains("writeManifest"),
+      s"a job ran after the manifest write: ${jobs.last}")
+    assert(!jobs.exists(_._2.contains("publishStagedDir")),
+      "the publish gate built the staged view")
+    val (_, readJobs) = withJobs {
+      ops.Sync.readPublishedMor(spark, root, "k")
+      ops.Sync.manifestRowCount(spark, root, 2)
+    }
+    assert(readJobs.isEmpty, s"post-publish reads ran jobs: $readJobs")
   }
 }
